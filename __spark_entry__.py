@@ -1766,7 +1766,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # regexes), curvature (quadratic closed form via rasterized
     # fixture); rows-only by nature: lm_perplexity, map_match,
     # label_propagation, cost_distance/cost_path/proximity/isochrones,
-    # warp_tiles, stay_points, stream_tile_heatmap (streaming).
+    # stay_points, stream_tile_heatmap (streaming).
     # Closing-session additions to the queue (all pytest-first; see
     # SURVEY.md 11.11-11.12): SQL-oracle-able candidates —
     # perplexity_buckets (percent_rank window), surt keys / read_cdxj

@@ -9,8 +9,8 @@ minhash-LSH dedup, ANN top-k). Timing excludes SparkSession startup;
 each query is an action-to-action wall time. ``pip_knn_rows_per_sec`` is
 the BASELINE.json headline throughput (tagged+nearest rows / join secs).
 
-Scaling evidence (N vs 4N executors): scripts/bench_scaling.py runs this
-file at SPARK_GRAFT_CPUS=8 and 32 and writes BENCH/BASELINE.md.
+The repo benchmark with oracle-checked, per-layer metrics is
+``perfbench/run.py``; this file keeps the historical headline queries.
 """
 
 from __future__ import annotations

@@ -326,12 +326,6 @@ CHECKS = {
                      "tiny audit fixture as SinglePartition; at scale "
                      "it is hashpartitioning(trip))"),
     ],
-    "warp_tiles (gdalwarp nearest)": [
-        ("ArrowEvalPython", "the Snyder inverse series is the only "
-                            "Python (lattice-sized, map-only)"),
-        ("BroadcastHashJoin", "raster_sample's tile broadcast"),
-        ("Range", "output lattice generated in-plan"),
-    ],
     "curvature (Zevenbergen-Thorne)": [
         ("MapInPandas", "strip emission is map-side"),
         ("FlatMapGroupsInPandas", "halo assembly + quadric kernel"),
@@ -869,11 +863,6 @@ def main():
         ((F.col("event_id") % 80) / 40.0 - 1.0).alias("lat"))
     plans["map_match (HMM Viterbi)"] = _mmt(
         _mtk, _rd, group_col="trip", road_id_col="road_id")
-    from spandex_spark.operators.warp import warp_tiles as _wrp
-    plans["warp_tiles (gdalwarp nearest)"] = _wrp(
-        raster_tiles_df(spark), from_srid_of_output=3857,
-        x0_out=-1113194.0, y0_out=-1113194.0, res_out=50000.0,
-        nx_out=40, ny_out=40, origin_x=-10.0, origin_y=-10.0)
     from spandex_spark.operators.focal import curvature as _curv
     plans["curvature (Zevenbergen-Thorne)"] = _curv(
         _ftiles, origin_x=-10.0, origin_y=-10.0, kind="plan")

@@ -104,7 +104,7 @@ def tag_points_bucketed(spark: SparkSession, points_table: str,
     (an IsNull filter), only the boundary fringe crosses into the exact
     PIP kernel (measured 2.4x faster than routing every candidate
     through a null-aware kernel: the Arrow transfer, not the PIP flops,
-    is the cost — see scripts/bench_bucketed.py). Both branches re-read
+    is the cost). Both branches re-read
     the bucketed tables, which costs a second exchange-free bucket scan,
     not a shuffle. With ``assume_disjoint`` the whole tag is ZERO-shuffle
     end-to-end; overlapping layers pay one winner shuffle on the point id

@@ -44,7 +44,6 @@ from spandex_spark.operators.trajectory import (  # noqa: F401
 from spandex_spark.operators.robots import parse_robots, robots_filter  # noqa: F401
 from spandex_spark.operators.mapmatch import map_match  # noqa: F401
 from spandex_spark.operators.network import shortest_paths, service_areas  # noqa: F401
-from spandex_spark.operators.warp import warp_tiles  # noqa: F401
 from spandex_spark.operators.viewshed import viewshed, viewshed_counts  # noqa: F401
 from spandex_spark.operators.predicates import spatial_predicate_join  # noqa: F401
 from spandex_spark.operators.bounds import (  # noqa: F401

@@ -21,7 +21,6 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spandex_spark.functions.spatial import cell_of_udf, haversine_udf
 from spandex_spark import cells as _cells
 from spandex_spark.geom import EARTH_RADIUS_M
 
@@ -83,9 +82,13 @@ def knn_join(queries: DataFrame, features: DataFrame, *, k: int,
         # prune (linear units; the planar metric ranks by SQUARED
         # distance, so compare against D^2 there). Exact: true top-k
         # distances are all <= D, so the filter only sheds non-winners
-        # before the top-k sort.
-        bound = (F.col("_dmax") * F.col("_dmax") if metric == "planar"
-                 else F.col("_dmax"))
+        # before the top-k sort. D is computed by numpy (hypot, or the
+        # haversine box bounds) and the distance here by the JVM in a
+        # different operation order, so a winner AT the bound can land a
+        # few ULP above it: widen D by a relative slack. A wider bound
+        # only keeps extra non-winners, so the result stays exact.
+        dmax = F.col("_dmax") * F.lit(1.0 + _DMAX_REL_SLACK)
+        bound = dmax * dmax if metric == "planar" else dmax
         cand = cand.filter(F.col("dist_m") <= bound).drop("_dmax")
     if k == 1:
         # k=1 fast path: min_by hash-aggregates with map-side partials (a
@@ -657,6 +660,7 @@ _MAX_PAIR_ROWS = 1_000_000    # driver pair-table cap: the table ships as
                               # a LocalRelation inside task binaries
                               # (~24 B/row), so keep it tens of MB at most
 _MAX_COARSE_ENUM = 262_144    # bbox-enumeration cap (cells; 512x512 box)
+_DMAX_REL_SLACK = 1e-9        # pair-table bound widening (knn_join)
 _QLEVEL_EXTRA = 3             # query-side grouping: hist.level + 3 (8x8
                               # children per coarse cell) tightens the
                               # position-uncertainty margin of the prune

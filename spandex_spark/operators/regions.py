@@ -54,10 +54,10 @@ def _local_ccl(v: np.ndarray, gx0: int, gy0: int, connectivity: int,
     two-pass CCL but over same-value row runs instead of pixels — run
     extraction is vectorized numpy, union-find touches runs only
     (runs << pixels on coherent rasters; the per-pixel Python loop it
-    replaced ran at 0.63M px/s vs ~5M for the other focal ops — see
-    scripts/bench_raster_ops.py). Returns float64 label array (NaN
-    where invalid), labels = min packed global pixel id per
-    component (the run's leftmost pixel, minimized by union-find)."""
+    replaced ran at 0.63M px/s vs ~5M for the other focal ops).
+    Returns float64 label array (NaN where invalid), labels = min
+    packed global pixel id per component (the run's leftmost pixel,
+    minimized by union-find)."""
     ny, nx = v.shape
     valid = ~np.isnan(v)
     # run breaks: validity change, value change (by_value), row starts

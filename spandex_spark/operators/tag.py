@@ -56,8 +56,12 @@ def _is_exact_rect(geom_row) -> bool:
     ``(py-y1)*(x2-x1)/(y2-y1)`` term is exactly 0 for a vertical edge), so
     parity is odd iff px in [minx, maxx), gated by py in [miny, maxy).
     The structural test — 4 vertices, every edge (incl. the closing one)
-    axis-parallel and nonzero — forces a simple rectangle traversal in
-    either orientation; bowties/zigzags fail the closing edge."""
+    axis-parallel and nonzero, and adjacent edges alternating between
+    horizontal and vertical — forces a simple rectangle traversal in
+    either orientation: opposite edges must then cancel to close the
+    ring. Degenerate rings such as VVHH (an edge and its reversal) fail
+    the alternation; their ray cast tags nothing, while the rectangle
+    predicate would tag their whole bbox."""
     offs = geom_row["ring_offsets"]
     if offs is not None and len(offs) > 2:
         return False
@@ -67,7 +71,9 @@ def _is_exact_rect(geom_row) -> bool:
         return False
     dx = np.diff(np.r_[xs, xs[0]])
     dy = np.diff(np.r_[ys, ys[0]])
-    if not bool(np.all((dx == 0.0) != (dy == 0.0))):
+    vertical = dx == 0.0
+    if not bool(np.all(vertical != (dy == 0.0))
+                and np.all(vertical != np.roll(vertical, 1))):
         return False
     minx, maxx = xs.min(), xs.max()
     miny, maxy = ys.min(), ys.max()
@@ -89,20 +95,6 @@ def _with_rect_cols(df: DataFrame) -> DataFrame:
             .withColumn("_ry0", F.col("geom.bbox.miny"))
             .withColumn("_rx1", F.col("geom.bbox.maxx"))
             .withColumn("_ry1", F.col("geom.bbox.maxy")))
-
-
-def _pip_closure(polys: dict):
-    """PIP refine with the polygon rings captured by closure: the Arrow
-    batch carries only (lon, lat, poly_id) — no geometry arrays per row."""
-
-    @pandas_udf(T.BooleanType())
-    def _pip(lon: pd.Series, lat: pd.Series, poly_id: pd.Series) -> pd.Series:
-        ids = poly_id.to_numpy(np.int64)
-        out = _geom.pip_pairs(lon.to_numpy(np.float64),
-                              lat.to_numpy(np.float64), ids, polys)
-        return pd.Series(out)
-
-    return _pip
 
 
 def _pip_closure_fullaware(polys: dict):

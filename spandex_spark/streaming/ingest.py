@@ -100,8 +100,7 @@ def stream_zone_rates(spark: SparkSession, input_dir: str,
     zones, level 12 cells (~0.09°) classify ~83% of zone area as FULL
     interior cells whose points skip the pandas refine entirely — 2x the
     micro-batch throughput of the round-3 default (level 9, whose cells
-    are zone-sized so nearly every point hit Python; measured in
-    scripts/bench_streaming.py)."""
+    are zone-sized so nearly every point hit Python)."""
     from spandex_spark.operators.tag import tag_points
     pages = (spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir))
     pts = geotag(pages, gazetteer).filter(F.col("lon").isNotNull())

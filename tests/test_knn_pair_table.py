@@ -79,3 +79,27 @@ class TestPairTableRoute:
         ra = sorted((r["pt_id"], r["rank"], r["poi_k"]) for r in a.collect())
         rb = sorted((r["pt_id"], r["rank"], r["poi_k"]) for r in b.collect())
         assert ra == rb
+
+    def test_planar_bound_keeps_winner_at_query_cell_corner(self, spark):
+        # The pair table's bound D comes from numpy's hypot, and the JVM
+        # compares the squared distance dx*dx + dy*dy against D*D. Here
+        # the only feature is the single point of its cell's feature box
+        # and the query sits on its query cell's far corner, so the true
+        # distance IS the worst-case bound; hypot(dx, dy)**2 rounds one
+        # ULP below dx*dx + dy*dy and an unwidened bound drops the winner.
+        import numpy as np
+        qlevel = 7 + knnmod._QLEVEL_EXTRA
+        qlon = 3 * 360.0 / (1 << qlevel)   # exact query-cell corner
+        qlat = 2 * 180.0 / (1 << qlevel)
+        flon, flat = 1.915, 3.223
+        dx, dy = flon - qlon, flat - qlat
+        assert np.hypot(dx, dy) ** 2 < dx * dx + dy * dy
+        qs = spark.createDataFrame([(1, qlon, qlat)],
+                                   "qid long, lon double, lat double")
+        feats = spark.createDataFrame([(7, flon, flat)],
+                                      "fid long, lon double, lat double")
+        got = [(r["qid"], r["rank"], r["fid"], r["dist_m"]) for r in
+               knn_join(qs, feats, k=1, query_id_col="qid",
+                        feature_id_col="fid", strategy="cells", level=7,
+                        metric="planar").collect()]
+        assert got == [(1, 1, 7, dx * dx + dy * dy)]

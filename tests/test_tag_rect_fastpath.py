@@ -5,6 +5,7 @@ same winners, including points exactly on shared zone edges."""
 import numpy as np
 from pyspark.sql import functions as F
 
+from spandex_spark.geom import points_in_polygon
 from spandex_spark.operators import tag_points
 from spandex_spark.operators.tag import PolygonIndex, _is_exact_rect
 from spandex_spark.sources.grids import (zones_df, donut_zones_df,
@@ -31,6 +32,18 @@ class TestRectFastPath:
         assert not any(_is_exact_rect(g) for g in rows.values())
         zrows = [r["geom"] for r in zones_df(spark).collect()]
         assert all(_is_exact_rect(g) for g in zrows)
+        # axis-parallel, nonzero edges that do not alternate H/V: the
+        # ring is degenerate, the ray cast tags no point, and the rect
+        # predicate would tag its whole bbox
+        for xs, ys in (([0.0, 0.0, 0.0, 1.0], [0.0, 1.0, 0.0, 0.0]),   # VVHH
+                       ([0.0, 0.0, 1.0, 0.0], [0.0, 1.0, 1.0, 1.0])):  # VHHV
+            g = {"xs": xs, "ys": ys, "ring_offsets": [0, 4],
+                 "bbox": {"minx": 0.0, "miny": 0.0,
+                          "maxx": 1.0, "maxy": 1.0}}
+            assert not points_in_polygon(
+                np.array([0.5]), np.array([0.5]),
+                np.array(xs), np.array(ys))[0]
+            assert not _is_exact_rect(g)
 
     def test_boundary_points_match_kernel_exactly(self, spark):
         # points ON zone edges and corners: the half-open rule decides
