@@ -460,8 +460,8 @@ def _q_knn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_tag_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1/E1 via the shuffle join (broadcast_polys=False — the large-
-    polygon-layer route where geometry rides the candidate rows): same
-    oracle as `pip_tag`."""
+    polygon-layer route where the cell table, ray-cast edges included, is
+    shuffled instead of broadcast): same oracle as `pip_tag`."""
     from spandex_spark.operators import tag_points
     pts = derived_points(_t(spark, sf_dir, "customer").select("c_custkey"),
                          "c_custkey")

@@ -64,7 +64,7 @@ def q_pip_tag_knn(spark, sf_dir):
     from pyspark.sql import functions as F
     from spandex_spark.operators import tag_points
     pts = _pts_from_lineitem(spark, sf_dir)
-    # no repartition_by_cell: the polygon side is broadcast, so cell
+    # no cell repartition: the polygon side is broadcast, so cell
     # co-location buys nothing here and the explode-side partitioning from
     # _pts_from_lineitem already spreads the stream across all cores
     tagged = tag_points(pts, None, poly_id_col="zone_id",
@@ -96,7 +96,7 @@ def prepare_inputs(spark):
     from spandex_spark.sources.grids import zones_df, raster_tiles_df, gazetteer_grid_df
     raster_tiles_df(spark).write.mode("overwrite").parquet(TILES_PATH)
     # level 11 cells ≈ 0.18 x 0.09 deg vs 1-deg zones: ~65% of zone area is
-    # interior (full) cells whose points skip the Python refine, and each
+    # interior (full) cells whose points skip the exact refine, and each
     # point cell is covered by ~1.1 zones → the join fan-out nearly vanishes
     _PREPARED["zone_index"] = PolygonIndex(zones_df(spark),
                                            poly_id_col="zone_id", level=11)

@@ -14,6 +14,9 @@ CHECKS = {
     "pip_tag (two-phase cell join)": [
         ("BroadcastHashJoin", "polygon side broadcast"),
         ("PushedFilters", "scan-level pushdown present"),
+        (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",
+         "ZERO Python on the point stream — full cells and the ray cast "
+         "are one JVM refine; the Python cover ran once, at index build"),
     ],
     "knn broadcast (k=1 agg path)": [
         ("SortAggregate|HashAggregate",
@@ -108,18 +111,6 @@ CHECKS = {
          "old pandas-UDF cover hid the partitioning and forced a shuffle). "
          "Parquet-sourced targets get the bounded "
          "Exchange hashpartitioning(_tid) back — verified both ways"),
-    ],
-    "tag_points_bucketed (persisted-shuffle co-located join)": [
-        ("SortMergeJoin", "aligned-bucket merge join (auto-broadcast "
-         "disabled for the audit — the claim must not rest on the small "
-         "fixture broadcasting)"),
-        (r"^(?![\s\S]*Exchange)",
-         "ZERO exchanges of ANY kind — both tables bucketed on cell at "
-         "write time, so the per-query cell shuffle is paid once at "
-         "layout time and never again; disjoint tag is zero-shuffle "
-         "end-to-end"),
-        ("ArrowEvalPython", "NULL-geometry full-cell kernel — interior "
-         "candidate rows ship null rings and skip the PIP flops"),
     ],
     "buffer_polygons (concave arrangement path)": [
         ("ArrowEvalPython", "per-row offset-strip/fan arrangement union"),
@@ -557,10 +548,24 @@ CHECKS = {
 }
 
 
+def _executed(plan: str) -> str:
+    """The plan text without the build plans of cached relations: a
+    materialized cache is scanned, its build plan does not run again."""
+    keep, depth = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :|+-"))
+        if depth is not None and indent > depth:
+            continue
+        depth = indent if "InMemoryRelation" in line else None
+        keep.append(line)
+    return "\n".join(keep)
+
+
 def main():
     from pyspark.sql import functions as F
     from spandex_spark.session import get_spark
     from spandex_spark.operators import tag_points, knn_join, proportion_overlap
+    from spandex_spark.operators.tag import PolygonIndex
     from spandex_spark.sources.grids import (
         derived_points, zones_df, parcels_df, gazetteer_grid_df)
 
@@ -572,8 +577,8 @@ def main():
 
     plans = {}
     plans["pip_tag (two-phase cell join)"] = tag_points(
-        pts, zones_df(spark), poly_id_col="zone_id",
-        point_id_col="c_custkey", level=9)
+        pts, None, poly_id_col="zone_id", point_id_col="c_custkey",
+        index=PolygonIndex(zones_df(spark), poly_id_col="zone_id", level=9))
     plans["knn broadcast (k=1 agg path)"] = knn_join(
         pts, gazetteer_grid_df(spark), k=1,
         query_id_col="c_custkey", feature_id_col="poi_k")
@@ -728,29 +733,6 @@ def main():
         "values", F.array_repeat(F.lit(1.0), 50 * 50))
     plans["focal slope (halo exchange)"] = _slope(
         _ftiles, origin_x=-10.0, origin_y=-10.0)
-
-    from spandex_spark.bucketing import (tag_points_bucketed,
-                                         write_points_bucketed,
-                                         write_polygons_bucketed)
-    _bdir = tempfile.mkdtemp()
-    write_points_bucketed(derived_points(
-        spark.range(4000).select(F.col("id").alias("pt_id")), "pt_id"),
-        "audit_pts_b", level=9, n_buckets=8, path=os.path.join(_bdir, "p"))
-    write_polygons_bucketed(zones_df(spark), "audit_zones_b",
-                            poly_id_col="zone_id", level=9, n_buckets=8,
-                            path=os.path.join(_bdir, "z"))
-    # run + capture the bucketed plan EAGERLY under the narrowed conf, then
-    # restore it: the main loop collects every other dataset afterwards and
-    # AQE reads the live session conf at that point
-    _old_abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    _bdf = tag_points_bucketed(spark, "audit_pts_b", "audit_zones_b",
-                               poly_id_col="zone_id", point_id_col="pt_id",
-                               assume_disjoint=True)
-    _bdf.collect()
-    rendered = {"tag_points_bucketed (persisted-shuffle co-located join)":
-                _bdf._jdf.queryExecution().executedPlan().toString()}
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _old_abt)
 
     from spandex_spark.operators.timeseries import sessionize
     plans["sessionize (gap sessions)"] = sessionize(
@@ -1092,16 +1074,13 @@ def main():
     out.write("# PLANS — physical-plan audit (generated by "
               "scripts/explain_audit.py)\n\n")
     import re
-    for name, df in list(plans.items()) + [(k, None) for k in rendered]:
-        if df is None:
-            plan = rendered[name]
-        else:
-            df.collect()  # run THIS dataset so AQE finalizes its own plan
-            plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, df in plans.items():
+        df.collect()  # run THIS dataset so AQE finalizes its own plan
+        plan = df._jdf.queryExecution().executedPlan().toString()
         out.write(f"## {name}\n\n")
         # checks read the FINAL plan; AQE's toString appends an
         # "== Initial Plan ==" section that double-counts exchanges
-        check_plan = plan.split("== Initial Plan ==")[0]
+        check_plan = _executed(plan.split("== Initial Plan ==")[0])
         for pattern, why in CHECKS.get(name, []):
             ok = bool(re.search(pattern, check_plan))
             out.write(f"- {'✅' if ok else '❌'} `{pattern}` — {why}\n")

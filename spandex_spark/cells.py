@@ -214,7 +214,7 @@ def cover_polygon_classified(xs: np.ndarray, ys: np.ndarray, level: int,
     entirely inside the even-odd region (intersection area == cell area).
     Points landing in a full cell are inside the polygon with no exact
     refine — at fine levels most of a polygon's area is full cells, so the
-    Python refine only ever sees the boundary fringe. A cell touching a
+    exact refine only ever sees the boundary fringe. A cell touching a
     hole is never full. (PostGIS gets the same effect from its box
     pre-filter + interior ring checks.)"""
     from spandex_spark.geom import rings_intersection_area

@@ -9,7 +9,6 @@ from spandex_spark.functions.spatial import (  # noqa: F401
     cell_of_udf,
     cell_parent_udf,
     cover_cells_udf,
-    pip_refine,
     haversine_udf,
     webmercator_udf,
     geom_is_valid_udf,

@@ -60,55 +60,52 @@ def cover_cells_udf(geom_col, level: int):
                         geom_col["ring_offsets"], F.lit(level))
 
 
-_CLASSIFIED_TYPE = T.ArrayType(T.StructType([
-    T.StructField("cell", T.LongType()),
-    T.StructField("full", T.BooleanType()),
-]))
+_CLASSIFIED_TYPE = T.StructType([
+    T.StructField("cells", T.ArrayType(T.StructType([
+        T.StructField("cell", T.LongType()),
+        T.StructField("full", T.BooleanType()),
+    ]))),
+    T.StructField("edges", T.ArrayType(T.StructType([
+        T.StructField(n, T.DoubleType()) for n in ("x1", "y1", "x2", "y2")
+    ]))),
+])
+
+
+def _ray_edges(xs: np.ndarray, ys: np.ndarray, offs) -> list[dict]:
+    """The edges geom.points_in_rings walks, in its direction: every ring's
+    vertex i -> i+1, closing edge included, horizontal edges dropped."""
+    out = []
+    for rx, ry in _geom.rings_of(xs, ys, offs):
+        x2, y2 = np.roll(rx, -1), np.roll(ry, -1)
+        keep = ry != y2
+        out.extend({"x1": a, "y1": b, "x2": c, "y2": d} for a, b, c, d in zip(
+            rx[keep].tolist(), ry[keep].tolist(),
+            x2[keep].tolist(), y2[keep].tolist()))
+    return out
 
 
 @pandas_udf(_CLASSIFIED_TYPE)
 def _cover_cells_classified(xs: pd.Series, ys: pd.Series, offs: pd.Series,
-                            level: pd.Series) -> pd.Series:
+                            level: pd.Series) -> pd.DataFrame:
     lvl = int(level.iloc[0])
-    out = []
+    cells, edges = [], []
     for x_arr, y_arr, o in zip(xs, ys, offs):
+        x_arr = np.asarray(x_arr, np.float64)
+        y_arr = np.asarray(y_arr, np.float64)
         cells_arr, full = _cells.cover_polygon_classified(
-            np.asarray(x_arr, np.float64), np.asarray(y_arr, np.float64),
-            lvl, _off(o))
-        out.append([{"cell": int(c), "full": bool(f)}
-                    for c, f in zip(cells_arr, full)])
-    return pd.Series(out)
+            x_arr, y_arr, lvl, _off(o))
+        cells.append([{"cell": int(c), "full": bool(f)}
+                      for c, f in zip(cells_arr, full)])
+        edges.append(_ray_edges(x_arr, y_arr, o))
+    return pd.DataFrame({"cells": cells, "edges": edges})
 
 
 def cover_cells_classified_udf(geom_col, level: int):
-    """Covering cells + interior/full flag (cells.cover_polygon_classified)."""
+    """``struct<cells, edges>`` of each polygon: its covering cells with an
+    interior/full flag (cells.cover_polygon_classified), and its ray-cast
+    edges for the exact refine. One Python pass builds both."""
     return _cover_cells_classified(geom_col["xs"], geom_col["ys"],
                                    geom_col["ring_offsets"], F.lit(level))
-
-
-@pandas_udf(T.BooleanType())
-def _pip(lon: pd.Series, lat: pd.Series, xs: pd.Series, ys: pd.Series,
-         offs: pd.Series, poly_id: pd.Series) -> pd.Series:
-    """Exact PIP refine over candidate pairs: vectorizes per distinct polygon
-    in the Arrow batch (geom.pip_pairs), never per row."""
-    ids = poly_id.to_numpy(np.int64)
-    polys: dict[int, tuple] = {}
-    for i in range(len(ids)):
-        pid = ids[i]
-        if pid not in polys:
-            polys[pid] = (np.asarray(xs.iloc[i], np.float64),
-                          np.asarray(ys.iloc[i], np.float64),
-                          _off(offs.iloc[i]))
-    out = _geom.pip_pairs(lon.to_numpy(np.float64), lat.to_numpy(np.float64),
-                          ids, polys)
-    return pd.Series(out)
-
-
-def pip_refine(lon, lat, geom_col, poly_id):
-    """Exact ST_Contains analog (spandex/spatialtoolz.py::tag refine phase);
-    even-odd over all rings (holes/multipart)."""
-    return _pip(lon, lat, geom_col["xs"], geom_col["ys"],
-                geom_col["ring_offsets"], poly_id)
 
 
 @pandas_udf(T.DoubleType())

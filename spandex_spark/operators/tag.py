@@ -4,149 +4,84 @@ Reference semantics: spandex/spatialtoolz.py::tag — label each target row
 with the id of the source polygon containing it (PostGIS
 ``ST_Contains(src.geom, ST_Centroid(tgt.geom))``). Here the ST_Contains is
 a coarse quadkey-cell equi-join (Catalyst broadcast or shuffle hash join,
-AQE-managed) followed by an exact vectorized ray-cast refine — the
-load-bearing pattern for every spatial operator in this engine.
+AQE-managed) followed by an exact ray-cast refine — the load-bearing
+pattern for every spatial operator in this engine.
 
 Scale notes (100 TB):
 - the point side streams; its cell key is a PURE JVM expression
   (functions/cells_sql.py) — no Python crossing, and Catalyst may safely
   evaluate it twice (join-key null filter + projection) at codegen speed;
-- the polygon side explodes into covering cells and is broadcast when small
-  (zone layers almost always are). In that mode the refine kernel receives
-  the polygon rings BY CLOSURE (one copy per executor, like the broadcast
-  itself) so candidate rows never carry geometry arrays through Arrow;
-- for large polygon layers (broadcast_polys=False) the join shuffles on
-  `cell` with AQE skew splitting + explicit mega-cell salting
-  (operators/skew.py), and geometry rides the candidate rows.
+- the polygon side explodes into covering cells, each flagged FULL when
+  it lies entirely inside its polygon; fringe cells carry the polygon's
+  ray-cast edges as an array column. That cell table is broadcast when
+  small (zone layers almost always are) and shuffled on ``cell`` when
+  not (``broadcast_polys=False``) — the only difference between routes;
+- the refine is one JVM expression on either route, ``_full OR
+  ray_cast(...)``, so the point stream never crosses into Python,
+  whatever the polygon shapes.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-from spandex_spark.functions.cells_sql import cell_of_expr, cell_parent_expr
+from spandex_spark.functions.cells_sql import cell_of_expr
 from spandex_spark.functions.spatial import (
-    cover_cells_udf, cover_cells_classified_udf, pip_refine, centroid_udf)
-from spandex_spark import geom as _geom
+    cover_cells_classified_udf, centroid_udf)
 
 
-def _geom_rings_entry(geom_row) -> tuple:
-    """(xs, ys, ring_offsets|None) tuple for a collected geom struct —
-    the closure-side polygon entry consumed by geom.pip_pairs."""
-    offs = geom_row["ring_offsets"]
-    arr = np.asarray(offs, np.int64) if offs is not None else None
-    if arr is not None and arr.shape[0] <= 2:
-        arr = None
-    return (np.asarray(geom_row["xs"], np.float64),
-            np.asarray(geom_row["ys"], np.float64), arr)
+def ray_cast(px: Column, py: Column, edges: Column) -> Column:
+    """geom.points_in_polygon as one Spark SQL expression: even-odd parity
+    of the +x ray over ``edges`` (array<struct<x1, y1, x2, y2>>, the
+    non-horizontal edges of every ring). Same half-open edge rule and the
+    same operation order per edge as the numpy kernel; Java doubles are
+    strict IEEE, so the result is bit-identical for every ring. Dropping
+    horizontal edges keeps the divisor non-zero, which ANSI mode needs."""
+    def flip(inside, e):
+        x1, y1, x2, y2 = e["x1"], e["y1"], e["x2"], e["y2"]
+        spans = ((y1 <= py) & (py < y2)) | ((y2 <= py) & (py < y1))
+        xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
+        return inside != (spans & (px < xint))
+    return F.aggregate(edges, F.lit(False), flip)
 
 
-def _is_exact_rect(geom_row) -> bool:
-    """True iff the geometry is a single-ring axis-aligned rectangle whose
-    stored bbox equals the ring bounds EXACTLY. For such rings the ray-cast
-    kernel (geom.points_in_polygon) reduces, bit-for-bit, to the half-open
-    predicate ``minx <= px < maxx AND miny <= py < maxy`` (the documented
-    left/bottom-inclusive boundary rule): the only crossing edges are the
-    two verticals, whose x-intercepts are exactly minx/maxx (the
-    ``(py-y1)*(x2-x1)/(y2-y1)`` term is exactly 0 for a vertical edge), so
-    parity is odd iff px in [minx, maxx), gated by py in [miny, maxy).
-    The structural test — 4 vertices, every edge (incl. the closing one)
-    axis-parallel and nonzero, and adjacent edges alternating between
-    horizontal and vertical — forces a simple rectangle traversal in
-    either orientation: opposite edges must then cancel to close the
-    ring. Degenerate rings such as VVHH (an edge and its reversal) fail
-    the alternation; their ray cast tags nothing, while the rectangle
-    predicate would tag their whole bbox."""
-    offs = geom_row["ring_offsets"]
-    if offs is not None and len(offs) > 2:
-        return False
-    xs = np.asarray(geom_row["xs"], np.float64)
-    ys = np.asarray(geom_row["ys"], np.float64)
-    if xs.shape[0] != 4:
-        return False
-    dx = np.diff(np.r_[xs, xs[0]])
-    dy = np.diff(np.r_[ys, ys[0]])
-    vertical = dx == 0.0
-    if not bool(np.all(vertical != (dy == 0.0))
-                and np.all(vertical != np.roll(vertical, 1))):
-        return False
-    minx, maxx = xs.min(), xs.max()
-    miny, maxy = ys.min(), ys.max()
-    if not (minx < maxx and miny < maxy):
-        return False
-    bbox = geom_row["bbox"]
-    return (bbox["minx"] == minx and bbox["maxx"] == maxx
-            and bbox["miny"] == miny and bbox["maxy"] == maxy)
-
-
-_RECT_COLS = ("_rx0", "_ry0", "_rx1", "_ry1")
-
-
-def _with_rect_cols(df: DataFrame) -> DataFrame:
-    """Attach the geometry bbox as flat columns on the covering-cell table
-    (pre-broadcast). Only consulted when the whole layer passed
-    _is_exact_rect, in which case bbox == ring bounds exactly."""
-    return (df.withColumn("_rx0", F.col("geom.bbox.minx"))
-            .withColumn("_ry0", F.col("geom.bbox.miny"))
-            .withColumn("_rx1", F.col("geom.bbox.maxx"))
-            .withColumn("_ry1", F.col("geom.bbox.maxy")))
-
-
-def _pip_closure_fullaware(polys: dict):
-    """Full-aware refine: rows whose covering cell is FULL (entirely inside
-    the polygon) are accepted without computing PIP — only the boundary
-    fringe runs the exact kernel. One pass, one scan (a full/boundary
-    union would execute the upstream join twice)."""
-
-    @pandas_udf(T.BooleanType())
-    def _pip(lon: pd.Series, lat: pd.Series, poly_id: pd.Series,
-             full: pd.Series) -> pd.Series:
-        out = full.to_numpy(dtype=bool, na_value=False).copy()
-        fringe = ~out
-        if fringe.any():
-            ids = poly_id.to_numpy(np.int64)[fringe]
-            out[fringe] = _geom.pip_pairs(
-                lon.to_numpy(np.float64)[fringe],
-                lat.to_numpy(np.float64)[fringe], ids, polys)
-        return pd.Series(out)
-
-    return _pip
+def _cell_table(polygons: DataFrame, poly_id_col: str,
+                poly_attr_cols: tuple[str, ...], level: int) -> DataFrame:
+    """One row per (polygon, covering cell): ``_pid``, ``_attr_*``,
+    ``cell``, ``_full`` and, on fringe cells only, ``_edges``."""
+    cover = cover_cells_classified_udf(F.col("geom"), level)
+    return (polygons.select(
+        F.col(poly_id_col).alias("_pid"),
+        *[F.col(c).alias(f"_attr_{c}") for c in poly_attr_cols],
+        cover.alias("_cov"))
+        .withColumn("_cc", F.explode("_cov.cells"))
+        .select("*", F.col("_cc.cell").alias("cell"),
+                F.col("_cc.full").alias("_full"),
+                F.when(~F.col("_cc.full"), F.col("_cov.edges")).alias("_edges"))
+        .drop("_cov", "_cc"))
 
 
 class PolygonIndex:
     """Reusable cell index of a (broadcast-sized) polygon layer — the
     rebuild's analog of the GiST index PostGIS builds at LOAD time
-    (spandex/io.py geometry-index DDL, O11): covering-cell table persisted
-    + exact rings collected once. Build once per layer+level; reuse across
-    every query/batch so steady-state throughput isn't charged the index
-    build (exactly as the reference never re-builds GiST per query)."""
+    (spandex/io.py geometry-index DDL, O11): the covering-cell table,
+    edges included, persisted once. Build once per layer+level; reuse
+    across every query/batch so steady-state throughput isn't charged the
+    index build (exactly as the reference never re-builds GiST per query)."""
+
+    # read by perfbench/workloads.py::tag_probe; every layer's fringe rows
+    # go through the ray cast, so no layer is refined without one
+    all_rects = False
 
     def __init__(self, polygons: DataFrame, *, poly_id_col: str, level: int,
                  poly_attr_cols: tuple[str, ...] = ()):
         self.level = level
         self.poly_id_col = poly_id_col
         self.poly_attr_cols = poly_attr_cols
-        polys = polygons.select(
-            F.col(poly_id_col).alias("_pid"), "geom",
-            *[F.col(c).alias(f"_attr_{c}") for c in poly_attr_cols])
-        self.cells_df = (_with_rect_cols(polys.withColumn(
-            "_cc", F.explode(cover_cells_classified_udf(F.col("geom"), level)))
-            .withColumn("cell", F.col("_cc.cell"))
-            .withColumn("_full", F.col("_cc.full")))
-            .drop("geom", "_cc").persist())
+        self.cells_df = _cell_table(polygons, poly_id_col, poly_attr_cols,
+                                    level).persist()
         self.cells_df.count()
-        rows = polys.select("_pid", "geom").collect()  # collect-ok: polygon layer broadcast-sized by contract (rings closure)
-        self.rings = {int(r["_pid"]): _geom_rings_entry(r["geom"])
-                      for r in rows}
-        # all-rectangles layer: the refine is a pure JVM predicate — no
-        # ArrowEvalPython on the point stream at all (guide §4.1: built-ins
-        # beat any UDF; the predicate is bit-identical to the kernel)
-        self.all_rects = all(_is_exact_rect(r["geom"]) for r in rows)
 
 
 def tag_points(points: DataFrame, polygons: DataFrame, *,
@@ -155,13 +90,21 @@ def tag_points(points: DataFrame, polygons: DataFrame, *,
                poly_attr_cols: tuple[str, ...] = (),
                broadcast_polys: bool = True,
                assume_disjoint: bool = False,
-               repartition_by_cell: int | None = None,
                index: PolygonIndex | None = None) -> DataFrame:
     """Tag each point with the containing polygon's id (NULL if none).
 
     Returns all point columns + ``poly_id_col`` (+ requested polygon attrs).
     For disjoint polygon layers each point matches at most one polygon; for
     overlapping layers the smallest ``poly_id_col`` wins (deterministic).
+
+    Each point joins the covering cells of its own cell. A candidate is a
+    hit when its cell is FULL, or else when the ray cast over the
+    polygon's edges (``ray_cast``, the exact even-odd rule of
+    geom.points_in_rings: holes and multipart included, left/bottom
+    boundaries inside) says so. ``broadcast_polys=False`` shuffles the
+    cell table instead of broadcasting it; an ``index`` is always
+    broadcast and replaces ``polygons``, ``poly_id_col``, ``level`` and
+    ``poly_attr_cols``.
 
     ``assume_disjoint=True`` (zone/parcel layers — polygons don't overlap):
     a point sits in exactly one cell and a polygon covers that cell once,
@@ -173,65 +116,17 @@ def tag_points(points: DataFrame, polygons: DataFrame, *,
         level = index.level
         poly_id_col = index.poly_id_col
         poly_attr_cols = index.poly_attr_cols
+        cells_df = index.cells_df
     else:
-        polys = polygons.select(
-            F.col(poly_id_col).alias("_pid"), "geom",
-            *[F.col(c).alias(f"_attr_{c}") for c in poly_attr_cols])
+        cells_df = _cell_table(polygons, poly_id_col, poly_attr_cols, level)
+    if index is not None or broadcast_polys:
+        cells_df = F.broadcast(cells_df)
 
     pts = points.withColumn(
         "cell", cell_of_expr(f"`{lon_col}`", f"`{lat_col}`", level))
-    if repartition_by_cell:
-        # spread the stream across the cluster keyed by a coarse cell prefix
-        # (north star: AQE-aware repartitioning by cell prefix) — one narrow
-        # 2-col-wider shuffle that parallelizes every downstream stage and
-        # co-locates spatially adjacent points for the refine kernel
-        pts = pts.repartition(repartition_by_cell,
-                              cell_parent_expr(F.col("cell"), level,
-                                               max(level - 4, 0)),
-                              F.col("cell"))
-
-    if index is not None or broadcast_polys:
-        # geometry by closure; join side carries ids + attrs only
-        if index is not None:
-            rings = index.rings
-            cells_df = index.cells_df
-            all_rects = index.all_rects
-        else:
-            rows = polys.select("_pid", "geom").collect()  # collect-ok: polygon layer broadcast-sized by contract (rings closure)
-            rings = {int(r["_pid"]): _geom_rings_entry(r["geom"])
-                     for r in rows}
-            all_rects = all(_is_exact_rect(r["geom"]) for r in rows)
-            cells_df = (_with_rect_cols(polys.withColumn(
-                "_cc", F.explode(cover_cells_classified_udf(F.col("geom"), level)))
-                .withColumn("cell", F.col("_cc.cell"))
-                .withColumn("_full", F.col("_cc.full")))
-                .drop("geom", "_cc"))
-        cand = pts.join(F.broadcast(cells_df), "cell", "inner")
-        if all_rects:
-            # all-rectangles refine entirely in whole-stage codegen (the
-            # half-open predicate is the exact ray-cast result for
-            # axis-aligned rings — see _is_exact_rect); FULL cells skip
-            # even the comparisons via the leading OR
-            inside = (F.coalesce(F.col("_full"), F.lit(False))
-                      | ((F.col(lon_col) >= F.col("_rx0"))
-                         & (F.col(lon_col) < F.col("_rx1"))
-                         & (F.col(lat_col) >= F.col("_ry0"))
-                         & (F.col(lat_col) < F.col("_ry1"))))
-            hits = cand.filter(inside).drop("_full", *_RECT_COLS)
-        else:
-            # interior-cell shortcut: the full-aware kernel accepts
-            # FULL-cell rows without computing PIP; only the boundary
-            # fringe pays flops
-            refine = _pip_closure_fullaware(rings)
-            hits = cand.filter(refine(F.col(lon_col), F.col(lat_col),
-                                      F.col("_pid"), F.col("_full"))) \
-                .drop("_full", *_RECT_COLS)
-    else:
-        polys_cells = polys.withColumn(
-            "cell", F.explode(cover_cells_udf(F.col("geom"), level)))
-        cand = pts.join(polys_cells, "cell", "inner")
-        hits = cand.filter(pip_refine(F.col(lon_col), F.col(lat_col),
-                                      F.col("geom"), F.col("_pid")))
+    inside = F.col("_full") | ray_cast(F.col(lon_col), F.col(lat_col),
+                                       F.col("_edges"))
+    hits = pts.join(cells_df, "cell", "inner").filter(inside)
 
     if assume_disjoint:
         return hits.select(

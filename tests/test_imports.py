@@ -38,7 +38,7 @@ UNREACHED_BY_DESIGN = {
 # or an entry point starts to use it; a module that falls out of the
 # entry points' reach must be added here explicitly.
 TEST_ONLY = {f"spandex_spark.{m}" for m in """
-    bucketing functions.geohash
+    functions.geohash
     operators.adaptive operators.affine operators.align operators.bitext
     operators.bloom operators.bounds operators.bpe operators.contour
     operators.costdist operators.dsir operators.genpoints operators.geomdist

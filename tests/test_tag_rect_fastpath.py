@@ -1,95 +1,187 @@
-"""The all-rectangles JVM refine (r6 optimization) must be bit-identical
-to the Python ray-cast kernel: same half-open [min, max) boundary rule,
-same winners, including points exactly on shared zone edges."""
+"""tag_points refines every candidate with one JVM ray cast
+(operators/tag.py::ray_cast). It must equal the numpy kernel
+(geom.points_in_rings) bit for bit on every ring shape — rectangles,
+holes, multipart, degenerate and overlapping polygons — on points on
+edges, vertices and shared zone boundaries, through the index, broadcast
+and shuffle routes alike, and with no Python on the point stream."""
+
+import re
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from spandex_spark.geom import points_in_polygon
+from spandex_spark.geom import points_in_rings
 from spandex_spark.operators import tag_points
-from spandex_spark.operators.tag import PolygonIndex, _is_exact_rect
+from spandex_spark.operators.tag import PolygonIndex
 from spandex_spark.sources.grids import (zones_df, donut_zones_df,
                                          derived_points)
 
+_POLY_SCHEMA = ("pid long, geom struct<kind: tinyint, xs: array<double>, "
+                "ys: array<double>, ring_offsets: array<int>, "
+                "bbox: struct<minx: double, miny: double, maxx: double, "
+                "maxy: double>>")
 
-def _zone_rows(spark, pts, zones, **kw):
-    out = tag_points(pts, zones, poly_id_col="zone_id",
+_BOUNDARY_PTS = [(0, 0.0, 0.0), (1, -10.0, -10.0), (2, 1.0, 1.0),
+                 (3, 0.5, 1.0), (4, 1.0, 0.5), (5, 9.999, 9.999),
+                 (6, 10.0, 10.0), (7, -0.5, -0.5),
+                 # donut corners, hole corners and shared donut edges
+                 (8, -8.0, -8.0), (9, -7.0, -7.0), (10, -5.0, -5.0),
+                 (11, -4.0, -6.0), (12, -6.0, -4.0), (13, -4.0, -4.0),
+                 (14, 4.0, 4.0), (15, 7.0, 5.0), (16, 8.0, 8.0),
+                 (17, -7.0, -6.0), (18, -5.0, -6.0), (19, 0.0, 3.0)]
+
+
+def _tagged(pts, polys, poly_id_col, **kw):
+    out = tag_points(pts, polys, poly_id_col=poly_id_col,
                      point_id_col="pt_id", **kw)
-    return sorted((r["pt_id"], r["zone_id"])
-                  for r in out.select("pt_id", "zone_id").collect())
+    return dict(out.select("pt_id", poly_id_col).collect())
+
+
+def _oracle(pts, polys, poly_id_col):
+    """pt_id -> smallest id of a polygon geom.points_in_rings puts the
+    point in (None when none does)."""
+    rows = pts.select("pt_id", "lon", "lat").collect()
+    ids = [r["pt_id"] for r in rows]
+    px = np.array([r["lon"] for r in rows], np.float64)
+    py = np.array([r["lat"] for r in rows], np.float64)
+    want = dict.fromkeys(ids)
+    for poly in sorted(polys.collect(), key=lambda r: r[poly_id_col]):
+        g = poly["geom"]
+        inside = points_in_rings(px, py, np.array(g["xs"], np.float64),
+                                 np.array(g["ys"], np.float64),
+                                 g["ring_offsets"])
+        for i in np.flatnonzero(inside):
+            if want[ids[i]] is None:
+                want[ids[i]] = poly[poly_id_col]
+    return want
+
+
+def _assert_all_routes(pts, polys, poly_id_col, level):
+    want = _oracle(pts, polys, poly_id_col)
+    index = PolygonIndex(polys, poly_id_col=poly_id_col, level=level)
+    try:
+        for kw in (dict(index=index), dict(level=level),
+                   dict(level=level, broadcast_polys=False)):
+            assert _tagged(pts, polys, poly_id_col, **kw) == want, kw
+    finally:
+        index.cells_df.unpersist()
+    return want
+
+
+def _ring_poly(rings, pid):
+    """(pid, geom) row for a polygon given as a list of (xs, ys) rings."""
+    xs = [float(v) for r in rings for v in r[0]]
+    ys = [float(v) for r in rings for v in r[1]]
+    offs = list(np.cumsum([0] + [len(r[0]) for r in rings]).tolist())
+    return (pid, (6, xs, ys, offs, (min(xs), min(ys), max(xs), max(ys))))
+
+
+def _star(rng, cx, cy, snap):
+    k = int(rng.integers(3, 9))
+    ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, 2 * k))
+    rad = np.where(np.arange(2 * k) % 2 == 0, rng.uniform(0.8, 1.6, 2 * k),
+                   rng.uniform(0.2, 0.8, 2 * k))
+    xs, ys = cx + rad * np.cos(ang), cy + rad * np.sin(ang)
+    if snap:  # lattice vertices: horizontal edges, rays through vertices
+        xs, ys = np.round(xs * 4.0) / 4.0, np.round(ys * 4.0) / 4.0
+    return xs, ys
+
+
+def _executed(plan: str) -> str:
+    """The plan text without the build plans of cached relations: a
+    materialized cache is scanned, its build plan does not run again."""
+    keep, depth = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :|+-"))
+        if depth is not None and indent > depth:
+            continue
+        depth = indent if "InMemoryRelation" in line else None
+        keep.append(line)
+    return "\n".join(keep)
 
 
 class TestRectFastPath:
-    def test_index_reports_all_rects(self, spark):
-        assert PolygonIndex(zones_df(spark), poly_id_col="zone_id",
-                            level=9).all_rects is True
-        assert PolygonIndex(donut_zones_df(spark), poly_id_col="dz_id",
-                            level=7).all_rects is False
-
     def test_rect_detection_rejects_non_rects(self, spark):
-        rows = {r["dz_id"]: r["geom"]
-                for r in donut_zones_df(spark).collect()}
-        assert not any(_is_exact_rect(g) for g in rows.values())
-        zrows = [r["geom"] for r in zones_df(spark).collect()]
-        assert all(_is_exact_rect(g) for g in zrows)
-        # axis-parallel, nonzero edges that do not alternate H/V: the
-        # ring is degenerate, the ray cast tags no point, and the rect
-        # predicate would tag its whole bbox
-        for xs, ys in (([0.0, 0.0, 0.0, 1.0], [0.0, 1.0, 0.0, 0.0]),   # VVHH
-                       ([0.0, 0.0, 1.0, 0.0], [0.0, 1.0, 1.0, 1.0])):  # VHHV
-            g = {"xs": xs, "ys": ys, "ring_offsets": [0, 4],
-                 "bbox": {"minx": 0.0, "miny": 0.0,
-                          "maxx": 1.0, "maxy": 1.0}}
-            assert not points_in_polygon(
-                np.array([0.5]), np.array([0.5]),
-                np.array(xs), np.array(ys))[0]
-            assert not _is_exact_rect(g)
+        # axis-parallel, nonzero edges that do not alternate H/V: the ring
+        # is degenerate, so no point is inside it — not even inside its bbox
+        polys = spark.createDataFrame(
+            [_ring_poly([([0.0, 0.0, 0.0, 1.0], [0.0, 1.0, 0.0, 0.0])],
+                        0),                                    # VVHH
+             _ring_poly([([0.0, 0.0, 1.0, 0.0], [0.0, 1.0, 1.0, 1.0])],
+                        1)],                                   # VHHV
+            _POLY_SCHEMA)
+        grid = [(i * 5 + j, i / 4.0, j / 4.0)
+                for i in range(5) for j in range(5)]
+        pts = spark.createDataFrame(grid, "pt_id long, lon double, lat double")
+        for kw in (dict(level=9), dict(level=9, broadcast_polys=False)):
+            got = _tagged(pts, polys, "pid", **kw)
+            assert len(got) == len(grid) and set(got.values()) == {None}
+        assert set(_oracle(pts, polys, "pid").values()) == {None}
 
     def test_boundary_points_match_kernel_exactly(self, spark):
         # points ON zone edges and corners: the half-open rule decides
-        # which of two adjacent zones wins; JVM predicate must agree with
-        # the ray-cast kernel row for row
-        pts = spark.createDataFrame(
-            [(0, 0.0, 0.0), (1, -10.0, -10.0), (2, 1.0, 1.0),
-             (3, 0.5, 1.0), (4, 1.0, 0.5), (5, 9.999, 9.999),
-             (6, 10.0, 10.0), (7, -0.5, -0.5)],
-            "pt_id long, lon double, lat double")
-        zones = zones_df(spark)
-        fast = _zone_rows(spark, pts, zones, level=9)
-        # force the Python kernel by monkeypatching detection off: a
-        # non-rect flag makes tag_points use _pip_closure_fullaware
-        import importlib
-        tagmod = importlib.import_module("spandex_spark.operators.tag")
-        orig = tagmod._is_exact_rect
-        tagmod._is_exact_rect = lambda g: False
-        try:
-            slow = _zone_rows(spark, pts, zones, level=9)
-        finally:
-            tagmod._is_exact_rect = orig
-        assert fast == slow
+        # which of two adjacent zones wins, and which side of a hole edge
+        pts = spark.createDataFrame(_BOUNDARY_PTS,
+                                    "pt_id long, lon double, lat double")
+        got = _assert_all_routes(pts, zones_df(spark), "zone_id", 9)
+        _assert_all_routes(pts, donut_zones_df(spark), "dz_id", 7)
         # closed form: point (lon, lat) tags zone floor(lon+10) + 20*floor(lat+10)
         # under the left/bottom-inclusive rule (None when out of range)
-        for pid, zid in fast:
-            row = [p for p in [(0, 0.0, 0.0), (1, -10.0, -10.0), (2, 1.0, 1.0),
-                               (3, 0.5, 1.0), (4, 1.0, 0.5), (5, 9.999, 9.999),
-                               (6, 10.0, 10.0), (7, -0.5, -0.5)]
-                   if p[0] == pid][0]
-            col = int(np.floor(row[1] + 10.0))
-            r = int(np.floor(row[2] + 10.0))
+        for pid, lon, lat in _BOUNDARY_PTS:
+            col = int(np.floor(lon + 10.0))
+            r = int(np.floor(lat + 10.0))
             exp = (col + 20 * r) if (0 <= col < 20 and 0 <= r < 20) else None
-            assert zid == exp
+            assert got[pid] == exp
 
     def test_derived_points_match_kernel(self, spark):
         pts = derived_points(
             spark.range(400).select(F.col("id").alias("pt_id")), "pt_id")
-        zones = zones_df(spark)
-        fast = _zone_rows(spark, pts, zones, level=9)
-        import importlib
-        tagmod = importlib.import_module("spandex_spark.operators.tag")
-        orig = tagmod._is_exact_rect
-        tagmod._is_exact_rect = lambda g: False
-        try:
-            slow = _zone_rows(spark, pts, zones, level=9)
-        finally:
-            tagmod._is_exact_rect = orig
-        assert fast == slow and len(fast) == 400
+        got = _assert_all_routes(pts, zones_df(spark), "zone_id", 9)
+        assert len(got) == 400 and None not in got.values()
+        _assert_all_routes(pts, donut_zones_df(spark), "dz_id", 7)
+
+    def test_fuzz_overlapping_and_holed_polygons(self, spark):
+        rng = np.random.default_rng(20241017)
+        rows = []
+        for pid in range(24):
+            cx, cy = rng.uniform(-2.0, 2.0, 2)
+            rows.append(_ring_poly([_star(rng, cx, cy, pid % 2)], pid))
+        for pid in range(24, 30):
+            cx, cy = rng.uniform(-2.0, 2.0, 2)
+            outer = _star(rng, cx, cy, pid % 2)
+            hole = (cx + 0.15 * (outer[0] - cx), cy + 0.15 * (outer[1] - cy))
+            part = _star(rng, cx + 3.0, cy - 3.0, pid % 2)
+            rows.append(_ring_poly(
+                [outer, (hole[0][::-1], hole[1][::-1]), part], pid))
+        polys = spark.createDataFrame(rows, _POLY_SCHEMA)
+
+        qx, qy = [], []
+        for _, g in rows:
+            xs, ys = np.array(g[1]), np.array(g[2])
+            for a, b in zip(g[3][:-1], g[3][1:]):
+                rx, ry = xs[a:b], ys[a:b]
+                qx += [rx, (rx + np.roll(rx, -1)) / 2.0]
+                qy += [ry, (ry + np.roll(ry, -1)) / 2.0]
+        qx.append(rng.uniform(-4.0, 6.0, 2000))
+        qy.append(rng.uniform(-6.0, 4.0, 2000))
+        qx, qy = np.concatenate(qx), np.concatenate(qy)
+        pts = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(qx, qy))],
+            "pt_id long, lon double, lat double")
+        want = _assert_all_routes(pts, polys, "pid", 9)
+        hit = sum(v is not None for v in want.values())
+        assert 0 < hit < len(want)
+
+    def test_index_tag_plan_runs_no_python(self, spark):
+        dz = donut_zones_df(spark)
+        index = PolygonIndex(dz, poly_id_col="dz_id", level=7)
+        pts = derived_points(
+            spark.range(200).select(F.col("id").alias("pt_id")), "pt_id")
+        out = tag_points(pts, None, poly_id_col="dz_id",
+                         point_id_col="pt_id", index=index)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        index.cells_df.unpersist()
+        assert "InMemoryTableScan" in plan
+        assert re.search(r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|"
+                         r"MapInPandas))", _executed(plan))
