@@ -528,7 +528,7 @@ def _q_overlay_m2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O7: zonal statistics of the synthetic raster over the zone grid."""
     from spandex_spark.operators import zonal_stats
-    out = zonal_stats(raster_tiles_df(spark), zones_df(spark), level=7)
+    out = zonal_stats(raster_tiles_df(spark), zones_df(spark))
     return out.select("zone_id", "px_count",
                       (F.round("px_sum", 6) + 0.0).alias("px_sum"),
                       (F.round("px_mean", 6) + 0.0).alias("px_mean"),
@@ -802,7 +802,7 @@ def _q_zonal_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     its exact spherical area, so means no longer over-represent high
     latitudes. Oracle recomputes the identical per-pixel weight formula."""
     from spandex_spark.operators import zonal_stats
-    out = zonal_stats(raster_tiles_df(spark), zones_df(spark), level=7,
+    out = zonal_stats(raster_tiles_df(spark), zones_df(spark),
                       weight="sph_area")
     return out.select("zone_id", "px_count",
                       (F.round("px_area_km2", 3) + 0.0).alias("px_area_km2"),
@@ -829,7 +829,7 @@ def _q_zonal_geotiff(spark: SparkSession, sf_dir: str,
     write_geotiff(path, full[::-1], x0=-10.0, y0=-10.0, res=0.05,
                   compression=compression)
     tiles = read_geotiff(spark, path, tile_rows=100, tile_cols=100)
-    out = zonal_stats(tiles, zones_df(spark), level=7)
+    out = zonal_stats(tiles, zones_df(spark))
     return out.select("zone_id", "px_count",
                       (F.round("px_sum", 6) + 0.0).alias("px_sum"),
                       (F.round("px_mean", 6) + 0.0).alias("px_mean"),
@@ -859,7 +859,7 @@ def _q_zonal_geotiff_multiband(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_geotiff(path, stack, x0=-10.0, y0=-10.0, res=0.05,
                   tile=(128, 128), compression="deflate")
     tiles = read_geotiff(spark, path, band=2, tile_rows=100, tile_cols=100)
-    out = zonal_stats(tiles, zones_df(spark), level=7)
+    out = zonal_stats(tiles, zones_df(spark))
     return out.select("zone_id", "px_count",
                       (F.round("px_sum", 6) + 0.0).alias("px_sum"),
                       (F.round("px_mean", 6) + 0.0).alias("px_mean"),
@@ -885,7 +885,7 @@ def _q_zonal_geotiff_aniso(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_geotiff(path, field[::-1], x0=-10.0, y0=-10.0, res=0.05,
                   res_y=0.025)
     tiles = read_geotiff(spark, path, tile_rows=100, tile_cols=100)
-    out = zonal_stats(tiles, zones_df(spark), level=7)
+    out = zonal_stats(tiles, zones_df(spark))
     return out.select("zone_id", "px_count",
                       (F.round("px_sum", 6) + 0.0).alias("px_sum"),
                       (F.round("px_mean", 6) + 0.0).alias("px_mean"),
@@ -1781,9 +1781,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # already oracled at position 53; pytest-first with SQL-oracle-able
     # closed forms awaiting slots — erode_polygons (rect (w-2r)(h-2r) /
     # donut fan closed forms), max_inscribed_circle (4-2*sqrt(2) corner
-    # forms); rows-only by nature — zone_transitions (streaming
-    # stateful; its batch twin zone_transitions_batch IS lag-window
-    # SQL-oracle-able if a slot opens).
+    # forms).
     # Post-final wave (SURVEY.md 11.14), rows-only by nature —
     # substring_dedup (ExactSubstr span surgery; window hashes are
     # xxhash64-defined, no DuckDB twin — planted-passage closed forms

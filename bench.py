@@ -108,7 +108,7 @@ def q_zonal(spark, sf_dir):
     from spandex_spark.operators import zonal_stats
     from spandex_spark.sources.grids import zones_df
     tiles = spark.read.parquet(TILES_PATH)
-    return zonal_stats(tiles, zones_df(spark), level=7)
+    return zonal_stats(tiles, zones_df(spark))
 
 
 def q_knn_cells(spark, sf_dir):

@@ -29,7 +29,11 @@ CHECKS = {
                 (r"least\(", "rect×rect fast path is pure JVM arithmetic "
                              "(LEAST/GREATEST inside codegen, no Python)")],
     "knn cells (histogram two-job path)": [
-        ("Generate explode", "candidate cells explode (per-query box)"),
+        (r"BroadcastHashJoin \[_qcell", "queries join the driver-built "
+         "(query cell, feature cell) pair table, broadcast, on _qcell"),
+        (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",
+         "ZERO Python operators — the pair table replaces the per-batch "
+         "candidate UDF"),
         ("HashAggregate|SortAggregate", "k=1 min_by map-side combine"),
     ],
     "nearest_road (linestring kernel)": [
@@ -425,11 +429,6 @@ CHECKS = {
         ("ArrowEvalPython", "per-row capsule+arrangement kernel (the "
          "documented Python pass; geometry never shuffles)"),
         (r"^(?![\s\S]*Exchange)", "ZERO shuffles — erosion is per-row"),
-    ],
-    "zone_transitions_batch (geofence backfill twin)": [
-        ("Window", "one lag window per entity"),
-        (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",
-         "ZERO Python operators on the batch path"),
     ],
     "interval_join (binned 1-D range join)": [
         (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",
@@ -965,14 +964,6 @@ def main():
     from spandex_spark.operators.buffer import erode_polygons as _erp
     plans["erode_polygons (negative buffer)"] = _erp(
         parcels_df(spark), radius=0.1)
-    from spandex_spark.streaming.geofence import zone_transitions_batch \
-        as _ztb
-    _gfe = spark.range(4000).select(
-        F.format_string("u%04d", F.col("id") % 400).alias("user_id"),
-        (F.to_timestamp(F.lit("2026-01-01 00:00:00"))
-         + F.make_interval(secs=(F.col("id") / 400).cast("int"))).alias("ts"),
-        (F.abs(F.xxhash64("id")) % 8).alias("zone_id"))
-    plans["zone_transitions_batch (geofence backfill twin)"] = _ztb(_gfe)
     from spandex_spark.operators.rangejoin import interval_join as _ivj
     _facts = spark.range(20000).select(
         F.col("id").alias("fid"),

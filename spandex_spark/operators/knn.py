@@ -8,11 +8,15 @@ strategies:
   POIs/stops vs parcels): broadcast cross join with the distance computed
   by JVM built-ins (stays inside whole-stage codegen; zero Python), then
   ``row_number() over (partition by query order by dist, id) <= k``.
-* ``cells`` (both sides large): grid ring expansion — join queries to
-  feature cells at ring r, grow r until every query holds >= k candidates
-  within a *verified* radius (kth distance <= r * min cell extent), union
-  rounds, then the same window top-k. Exact, shuffle-bounded, no cross
-  product.
+* ``cells`` (both sides large): a feature cell histogram bounds each
+  query cell's kth distance; the driver enumerates the candidate feature
+  cells per query cell into a broadcast pair table, queries hash-join it
+  on their cell, and the same window top-k ranks the candidates. Exact,
+  no cross product. Past the pair-table caps a pandas UDF enumerates
+  the same candidate cells per Arrow batch instead.
+
+``nearest_feature_column`` is the fused-pipeline form of k=1 against a
+collected feature set.
 """
 
 from __future__ import annotations
@@ -39,8 +43,12 @@ def knn_join(queries: DataFrame, features: DataFrame, *, k: int,
              q_lon: str = "lon", q_lat: str = "lat",
              f_lon: str = "lon", f_lat: str = "lat",
              strategy: str = "broadcast", level: int = 7,
-             max_rings: int = 64, metric: str = "haversine") -> DataFrame:
+             metric: str = "haversine") -> DataFrame:
     """k nearest features per query point. Ties broken by (dist, feature_id).
+
+    ``strategy``: 'broadcast' (cross join against the broadcast feature
+    side) or 'cells' (the pair-table route at fine cell ``level``; see
+    the module docstring).
 
     ``metric``: 'haversine' (meters, great-circle — the default) or
     'planar' (squared lon/lat degrees — exact FP-reproducible arithmetic,
@@ -52,9 +60,6 @@ def knn_join(queries: DataFrame, features: DataFrame, *, k: int,
     f = features.select(F.col(feature_id_col).alias("_fid"),
                         F.col(f_lon).alias("_flon"), F.col(f_lat).alias("_flat"))
 
-    if strategy == "kernel":
-        return _knn_kernel(q, f, k=k, query_id_col=query_id_col,
-                           feature_id_col=feature_id_col, metric=metric)
     if metric not in ("haversine", "planar"):
         raise ValueError(f"unknown metric {metric!r}")
     if strategy == "broadcast":
@@ -62,20 +67,17 @@ def knn_join(queries: DataFrame, features: DataFrame, *, k: int,
     elif strategy == "cells":
         # metric matters here: the search-box derivation must bound the
         # kth distance under the SAME metric the ranking uses (ADVICE r2)
-        cand = _ring_candidates(q, f, k=k, level=level, max_rings=max_rings,
-                                metric=metric)
+        cand = _ring_candidates(q, f, k=k, level=level, metric=metric)
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 
     if metric == "haversine":
         dist = haversine_expr(F.col("_qlon"), F.col("_qlat"),
                               F.col("_flon"), F.col("_flat"))
-    elif metric == "planar":
+    else:
         dx = F.col("_flon") - F.col("_qlon")
         dy = F.col("_flat") - F.col("_qlat")
         dist = dx * dx + dy * dy
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
     cand = cand.withColumn("dist_m", dist)
     if "_dmax" in cand.columns:
         # per-query-cell kth-distance upper bound from the cells-route
@@ -117,64 +119,13 @@ def knn_join(queries: DataFrame, features: DataFrame, *, k: int,
                       F.col("_fid").alias(feature_id_col), "dist_m")
 
 
-def _knn_kernel(q: DataFrame, f: DataFrame, *, k: int, query_id_col: str,
-                feature_id_col: str, metric: str) -> DataFrame:
-    """Small-feature-side fast path: features collected once (broadcast-
-    sized by contract, like a POI/stop layer) and closed over a mapInPandas
-    scan of the query stream — one (B x M) numpy distance matrix per Arrow
-    batch, no M-way row fan-out, no shuffle at all. Exact."""
-    from collections.abc import Iterator
-    from pyspark.sql import types as T
-    from spandex_spark.geom import haversine_m
-
-    frows = f.collect()  # collect-ok: feature side broadcast-sized by contract (kernel strategy)
-    fids = np.array([r["_fid"] for r in frows], dtype=np.int64)
-    flon = np.array([r["_flon"] for r in frows], dtype=np.float64)
-    flat = np.array([r["_flat"] for r in frows], dtype=np.float64)
-    kk = min(k, fids.shape[0])
-
-    schema = T.StructType([
-        T.StructField("q", T.LongType()),
-        T.StructField("rank", T.IntegerType()),
-        T.StructField("fid", T.LongType()),
-        T.StructField("dist_m", T.DoubleType()),
-    ])
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            qlon = pdf["_qlon"].to_numpy(np.float64)
-            qlat = pdf["_qlat"].to_numpy(np.float64)
-            if metric == "haversine":
-                d = haversine_m(qlon[:, None], qlat[:, None],
-                                flon[None, :], flat[None, :])
-            else:
-                d = ((flon[None, :] - qlon[:, None]) ** 2
-                     + (flat[None, :] - qlat[:, None]) ** 2)
-            # exact (dist, fid) tie-break: full lexsort — M is broadcast-sized
-            sel = np.lexsort((np.broadcast_to(fids, d.shape), d), axis=1)[:, :kk]
-            yield pd.DataFrame({
-                "q": np.repeat(pdf["_qid"].to_numpy(np.int64), kk),
-                "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), n),
-                "fid": fids[sel.ravel()],
-                "dist_m": np.take_along_axis(d, sel, axis=1).ravel(),
-            })
-
-    out = q.mapInPandas(scan, schema=schema)
-    return out.select(F.col("q").alias(query_id_col), "rank",
-                      F.col("fid").alias(feature_id_col), "dist_m")
-
-
 def nearest_feature_column(features: DataFrame, *, feature_id_col: str,
-                           f_lon: str = "lon", f_lat: str = "lat",
-                           metric: str = "haversine"):
+                           f_lon: str = "lon", f_lat: str = "lat"):
     """Column factory for the fused pipeline: ``col = nearest(lon, lat)``
     returns struct(feature_id, dist_m) of the nearest feature, computed as
-    one numpy distance matrix per Arrow batch against the collected
-    (broadcast-sized) feature set. Lets tag+kNN run as a single scan with
-    no join on the point stream."""
+    one numpy haversine distance matrix (meters) per Arrow batch against
+    the collected (broadcast-sized) feature set. Lets tag+kNN run as a
+    single scan with no join on the point stream."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
     from spandex_spark.geom import haversine_m
@@ -193,12 +144,8 @@ def nearest_feature_column(features: DataFrame, *, feature_id_col: str,
             return pd.DataFrame({"feature_id": [], "dist_m": []})
         qlon = lon.to_numpy(np.float64)
         qlat = lat.to_numpy(np.float64)
-        if metric == "haversine":
-            d = haversine_m(qlon[:, None], qlat[:, None],
-                            flon[None, :], flat[None, :])
-        else:
-            d = ((flon[None, :] - qlon[:, None]) ** 2
-                 + (flat[None, :] - qlat[:, None]) ** 2)
+        d = haversine_m(qlon[:, None], qlat[:, None],
+                        flon[None, :], flat[None, :])
         # argmin with (dist, fid) tie-break: fids are sorted-stable via lexsort
         sel = np.lexsort((np.broadcast_to(fids, d.shape), d), axis=1)[:, 0]
         return pd.DataFrame({"feature_id": fids[sel],
@@ -478,10 +425,6 @@ def _box_haversine_bounds(qx0, qx1, qy0, qy1, cx0, cx1, cy0, cy1):
     return mind, maxd
 
 
-# broadcasting-safe for (children x candidates) matrices too
-_box_haversine_bounds_2d = _box_haversine_bounds
-
-
 def _candidate_lists_for_coarse(hist, sparse, ux: np.ndarray, uy: np.ndarray,
                                 qlevel: int, k: int, metric: str) -> list:
     """Candidate FINE-cell id arrays for each DISTINCT query cell
@@ -557,8 +500,8 @@ def _candidate_lists_for_coarse(hist, sparse, ux: np.ndarray, uy: np.ndarray,
             maxd = np.hypot(np.maximum(cx1 - qx0, qx1 - cx0),
                             np.maximum(cy1 - qy0, qy1 - cy0))
         else:
-            mind, maxd = _box_haversine_bounds_2d(qx0, qx1, qy0, qy1,
-                                                  cx0, cx1, cy0, cy1)
+            mind, maxd = _box_haversine_bounds(qx0, qx1, qy0, qy1,
+                                               cx0, cx1, cy0, cy1)
         order = np.argsort(maxd, axis=1, kind="stable")
         csum = np.cumsum(np.take_along_axis(
             np.broadcast_to(sparse.cnt[idx], maxd.shape), order, axis=1),
@@ -667,7 +610,7 @@ _QLEVEL_EXTRA = 3             # query-side grouping: hist.level + 3 (8x8
 
 
 def _ring_candidates(q: DataFrame, f: DataFrame, *, k: int, level: int,
-                     max_rings: int, metric: str = "haversine") -> DataFrame:
+                     metric: str = "haversine") -> DataFrame:
     """Cells-strategy candidate pairs in exactly THREE (small) Spark jobs:
 
     job 1  feature cell histogram at the FINE level (groupBy(cell).count()
@@ -696,8 +639,7 @@ def _ring_candidates(q: DataFrame, f: DataFrame, *, k: int, level: int,
 
     Exact for both metrics: haversine boxes are latitude-aware and wrap at
     the antimeridian; planar boxes are Chebyshev in degree space, unwrapped
-    (see _search_radii / _search_radii_planar). ``max_rings`` is retained
-    for signature compatibility but no longer bounds correctness.
+    (see _search_radii / _search_radii_planar).
     """
     if level > _CELLS_MAX_LEVEL:
         raise ValueError(f"cells strategy supports level <= {_CELLS_MAX_LEVEL}")

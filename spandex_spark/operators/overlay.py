@@ -2,9 +2,11 @@
 
 Reference semantics: spandex/spatialtoolz.py::proportion_overlap — for each
 target polygon, SUM(ST_Area(ST_Intersection(t.geom, o.geom))) /
-ST_Area(t.geom). Rebuilt as: cell join for candidate pairs → pair dedup
-(a pair can meet in several cells) → exact intersection-area kernel →
-hash aggregation per target.
+ST_Area(t.geom). Rebuilt as: bbox-cover cell join for candidate pairs →
+reference-point pair dedup (a pair can meet in several cells; it is kept
+only in the cell of its bbox-intersection min corner, a JVM column
+predicate, so no dedup shuffle) → exact intersection-area kernel → hash
+aggregation per target.
 
 Intersection kernel has two tiers:
 - **JVM fast path** for canonical axis-aligned rectangle pairs (the
@@ -15,11 +17,6 @@ Intersection kernel has two tiers:
 - **Arrow-batched pandas UDF** running the exact even-odd multi-ring
   kernel (geom.rings_intersection_area) for everything else — holes and
   multipolygons included.
-
-Scale notes: pair dedup is one extra shuffle on (target_id, overlay_id);
-at 100 TB this can be replaced by reference-point dedup (keep a pair only
-in the cell of its intersection-bbox min corner) to stay shuffle-free —
-recorded as the scale path; correctness-first version ships the dedup.
 """
 
 from __future__ import annotations
@@ -32,8 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from spandex_spark import geom as _geom
-from spandex_spark.functions.cells_sql import explode_bbox_cells
-from spandex_spark.functions.spatial import cover_cells_udf
+from spandex_spark.functions.cells_sql import cell_of_expr, explode_bbox_cells
 
 
 @pandas_udf(T.DoubleType())
@@ -121,11 +117,36 @@ def rect_intersection_area_expr(a, b):
     return F.when((w > 0) & (h > 0), w * h).otherwise(F.lit(0.0))
 
 
+def _candidate_pairs(tgt: DataFrame, overlays: DataFrame,
+                     overlay_id_col: str, level: int,
+                     broadcast_overlays: bool) -> DataFrame:
+    """(_tid, _tgeom, _oid, _ogeom, cell) rows, one per (target, overlay)
+    pair whose bboxes meet. Both sides are covered by their bbox cells
+    and join on the cell; a pair meets in every cell both covers hold,
+    so it is kept only in the cell containing the bbox-intersection min
+    corner (Patel & DeWitt's reference-point method). That corner lies
+    in one bbox-cover cell of BOTH sides, and the filter is a pure JVM
+    column predicate, so there is no dedup shuffle."""
+    ovl = overlays.select(F.col(overlay_id_col).alias("_oid"),
+                          F.col("geom").alias("_ogeom"))
+    tgt_cells = explode_bbox_cells(
+        tgt, "_tgeom.bbox.minx", "_tgeom.bbox.miny",
+        "_tgeom.bbox.maxx", "_tgeom.bbox.maxy", level)
+    ovl_cells = explode_bbox_cells(
+        ovl, "_ogeom.bbox.minx", "_ogeom.bbox.miny",
+        "_ogeom.bbox.maxx", "_ogeom.bbox.maxy", level)
+    if broadcast_overlays:
+        ovl_cells = F.broadcast(ovl_cells)
+    pairs = tgt_cells.join(ovl_cells, "cell", "inner")
+    ref_x = "greatest(_tgeom.bbox.minx, _ogeom.bbox.minx)"
+    ref_y = "greatest(_tgeom.bbox.miny, _ogeom.bbox.miny)"
+    return pairs.filter(cell_of_expr(ref_x, ref_y, level) == F.col("cell"))
+
+
 def proportion_overlap(targets: DataFrame, overlays: DataFrame, *,
                        target_id_col: str, overlay_id_col: str,
                        level: int = 8, broadcast_overlays: bool = True,
                        keep_pairs: bool = False,
-                       pair_dedup: str = "refpoint",
                        area_unit: str = "deg2") -> DataFrame:
     """Fraction of each target polygon's area covered by the overlay layer.
 
@@ -142,52 +163,19 @@ def proportion_overlap(targets: DataFrame, overlays: DataFrame, *,
     approximation (the intersection polygon itself is never materialized).
     target_area under 'sph_m2' is the exact spherical kernel.
 
-    ``pair_dedup``: a (target, overlay) pair meets in every cell both
-    covers; it must be counted once.
-    - 'refpoint' (default — the 100 TB shape, Patel & DeWitt's reference-
-      point method): cover both sides by their BBOXES and keep the pair
-      only in the cell containing the bbox-intersection min corner — that
-      corner provably lies in one bbox-cover cell of BOTH sides, and the
-      filter is a pure JVM column predicate → NO dedup shuffle. Extra
-      bbox-over-geometry candidate pairs die at the ``ix_area > 0`` test.
-    - 'shuffle': exact geometry covering (fewer candidate pairs) +
-      dropDuplicates on (tid, oid) — one extra shuffle. Better when
-      geometries are much smaller than their bboxes (sliver shapes).
+    Candidate pairs come from `_candidate_pairs` (bbox cells,
+    reference-point dedup, no dedup shuffle). That is exact for every
+    input, holed and multipart overlays included: the extra
+    bbox-over-geometry candidate pairs die at the ``ix_area > 0`` test.
     """
     tgt = targets.select(F.col(target_id_col).alias("_tid"),
                          F.col("geom").alias("_tgeom"))
-    ovl = overlays.select(F.col(overlay_id_col).alias("_oid"),
-                          F.col("geom").alias("_ogeom"))
-
-    if pair_dedup == "refpoint":
-        tgt_cells = explode_bbox_cells(
-            tgt, "_tgeom.bbox.minx", "_tgeom.bbox.miny",
-            "_tgeom.bbox.maxx", "_tgeom.bbox.maxy", level)
-        ovl_cells = explode_bbox_cells(
-            ovl, "_ogeom.bbox.minx", "_ogeom.bbox.miny",
-            "_ogeom.bbox.maxx", "_ogeom.bbox.maxy", level)
-    elif pair_dedup == "shuffle":
-        tgt_cells = tgt.withColumn(
-            "cell", F.explode(cover_cells_udf(F.col("_tgeom"), level)))
-        ovl_cells = ovl.withColumn(
-            "cell", F.explode(cover_cells_udf(F.col("_ogeom"), level)))
-    else:
-        raise ValueError(f"unknown pair_dedup {pair_dedup!r}")
-    if broadcast_overlays:
-        ovl_cells = F.broadcast(ovl_cells)
-
-    pairs = tgt_cells.join(ovl_cells, "cell", "inner")
-    if pair_dedup == "refpoint":
-        from spandex_spark.functions.cells_sql import cell_of_expr
-        ref_x = "greatest(_tgeom.bbox.minx, _ogeom.bbox.minx)"
-        ref_y = "greatest(_tgeom.bbox.miny, _ogeom.bbox.miny)"
-        pairs = pairs.filter(cell_of_expr(ref_x, ref_y, level) == F.col("cell"))
-    else:
-        pairs = pairs.dropDuplicates(["_tid", "_oid"])
+    pairs = _candidate_pairs(tgt, overlays, overlay_id_col, level,
+                             broadcast_overlays)
 
     # split: rect×rect pairs stay entirely JVM-side (codegen); the rest run
     # the exact multi-ring kernel. One scan each — the filter is a cheap
-    # column predicate, and Catalyst reuses the deduped pair exchange.
+    # column predicate.
     both_rect = is_canonical_rect(F.col("_tgeom")) & is_canonical_rect(F.col("_ogeom"))
     if area_unit not in ("deg2", "sph_m2"):
         raise ValueError(f"unknown area_unit {area_unit!r}")
@@ -244,33 +232,19 @@ def intersection_join(targets: DataFrame, overlays: DataFrame, *,
     SHAPES, not just their areas). Returns one row per intersecting
     (target, overlay) pair: (target_id_col, overlay_id_col, out_col).
 
-    Same two-phase plan as proportion_overlap's refpoint route (bbox
-    cover cells, Patel–DeWitt reference-point dedup — no dedup shuffle):
+    Same candidate pairs as proportion_overlap (`_candidate_pairs`):
     rect x rect pairs construct the intersection rectangle in PURE JVM
     codegen; general pairs run geom.boolean_rings(a, b, 'intersection')
     (the planar-arrangement kernel — holes, multiparts, partial overlaps
     all exact) in one Arrow-vectorized pandas UDF. Empty intersections
     drop out.
     """
-    from spandex_spark.functions.cells_sql import cell_of_expr
     from spandex_spark.operators.trim import _GEOM_TYPE
 
     tgt = targets.select(F.col(target_id_col).alias("_tid"),
                          F.col("geom").alias("_tgeom"))
-    ovl = overlays.select(F.col(overlay_id_col).alias("_oid"),
-                          F.col("geom").alias("_ogeom"))
-    tgt_cells = explode_bbox_cells(
-        tgt, "_tgeom.bbox.minx", "_tgeom.bbox.miny",
-        "_tgeom.bbox.maxx", "_tgeom.bbox.maxy", level)
-    ovl_cells = explode_bbox_cells(
-        ovl, "_ogeom.bbox.minx", "_ogeom.bbox.miny",
-        "_ogeom.bbox.maxx", "_ogeom.bbox.maxy", level)
-    if broadcast_overlays:
-        ovl_cells = F.broadcast(ovl_cells)
-    pairs = tgt_cells.join(ovl_cells, "cell", "inner")
-    ref_x = "greatest(_tgeom.bbox.minx, _ogeom.bbox.minx)"
-    ref_y = "greatest(_tgeom.bbox.miny, _ogeom.bbox.miny)"
-    pairs = pairs.filter(cell_of_expr(ref_x, ref_y, level) == F.col("cell"))
+    pairs = _candidate_pairs(tgt, overlays, overlay_id_col, level,
+                             broadcast_overlays)
 
     a, b = F.col("_tgeom"), F.col("_ogeom")
     both_rect = is_canonical_rect(a) & is_canonical_rect(b)

@@ -14,7 +14,7 @@ under distributed input ordering — here overlaps resolve by
 ``combine='max'`` (or ``'min'``) of the burn VALUE, a commutative rule
 that makes output independent of partitioning (documented deviation).
 
-Scale shape — identical to `zonal_stats`, in reverse:
+Scale shape:
 
 * candidate (tile, polygon) pairs are built on a coarse-cell join of
   IDS ONLY (tile spec rows are 6 scalars; no pixel payload exists yet);

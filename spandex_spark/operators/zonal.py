@@ -3,17 +3,15 @@
 Reference semantics: spandex/rastertoolz.py (from_geotiff/to_matrix/
 clip2shp + rasterstats-style zonal_stats(vectors, raster, stats)). Rebuilt
 Spark-native: the raster is a TILE TABLE (tile_id, x0, y0, res, nx, ny,
-values row-major) — tiles join to zones on coarse cells, then a vectorized
-Arrow kernel computes PARTIAL stats (count/sum/sumsq/min/max) of each
-(tile, zone) pair via a pixel-center-in-polygon mask; a final hash
-aggregation combines partials per zone.
+values row-major) and stays distributed; the zone layer is collected to
+the driver and broadcast, as the reference holds it in memory. A
+vectorized Arrow kernel picks each tile's candidate zones by bbox overlap
+and computes PARTIAL stats (count/sum/sumsq/min/max) of each (tile, zone)
+pair via a pixel-center-in-polygon mask; a final hash aggregation
+combines partials per zone.
 
-Scale shape: the candidate (tile, zone) pair list is built and deduped on
-IDs ONLY (pixel arrays excluded), zones are aggregated per tile
-(collect_list of small rings), and the pixel arrays join in exactly once
-per tile — so the heavy column never fans out per pair and never shuffles
-more than once. Map-side partials → reduce: only (zone, partial) rows move
-in the final shuffle.
+Scale shape: the pixel arrays never move. Map-side partials → reduce:
+only (zone, partial) rows cross the plan's one exchange.
 """
 
 from __future__ import annotations
@@ -29,6 +27,8 @@ from pyspark.sql.functions import pandas_udf
 
 from spandex_spark import geom as _geom
 from spandex_spark import cells as _cells
+
+
 def _with_res_y(tiles: DataFrame) -> DataFrame:
     """Tile tables may carry an anisotropic y resolution (``res_y``,
     emitted by sources/geotiff.py for sy != sx rasters); square tables
@@ -51,51 +51,65 @@ _PARTIAL_SCHEMA = T.StructType([
 ])
 
 
-def _tiles_with_candidate_zones(tiles: DataFrame, zones: DataFrame,
-                                zone_id_col: str, level: int,
-                                broadcast_zones: bool) -> DataFrame:
-    """The zonal candidate machinery, shared by zonal_stats and
-    zonal_histogram: cell-cover both sides, join candidate
-    (tile, zone) PAIRS on cell ids only (pixel arrays stay out of that
-    shuffle), then join each tile's candidate-zone ring list in exactly
-    once.
+def _zone_layer(zones: DataFrame, zone_id_col: str):
+    """Collect the zone layer once and ship it as one Spark broadcast of
+    (entries, bboxes): entries are (zone_id, xs, ys, ring_offsets or
+    None) and bboxes the (minx, maxx, miny, maxy) arrays over them (the
+    bbox over the ring concatenation is the bbox over all rings)."""
+    zrows = zones.select(F.col(zone_id_col).alias("_zid"),
+                         "geom").collect()  # collect-ok: zone layer broadcast-sized by contract (rings closure)
+    entries = []
+    for r in zrows:
+        g = r["geom"]
+        zo = g["ring_offsets"]
+        entries.append((int(r["_zid"]), np.asarray(g["xs"], np.float64),
+                        np.asarray(g["ys"], np.float64),
+                        (np.asarray(zo, np.int64)
+                         if zo is not None and len(zo) > 2 else None)))
+    bbox = (np.array([e[1].min() for e in entries]),
+            np.array([e[1].max() for e in entries]),
+            np.array([e[2].min() for e in entries]),
+            np.array([e[2].max() for e in entries]))
+    return zones.sparkSession.sparkContext.broadcast((entries, bbox))
 
-    r6: both covers are BBOX covers in pure JVM codegen
-    (explode_bbox_cells) instead of pandas UDFs — the zone side's bbox
-    cover is a SUPERSET of the exact polygon cover, which only adds
-    candidate pairs whose pixel mask comes back empty (the kernel's
-    bbox+PIP tests decide membership), so every aggregate is unchanged
-    while the last Python stage outside the pixel kernel disappears
-    (guide §4.1)."""
-    from spandex_spark.functions.cells_sql import explode_bbox_cells
-    zsel = zones.select(F.col(zone_id_col).alias("_zid"),
-                        F.col("geom")["xs"].alias("_zxs"),
-                        F.col("geom")["ys"].alias("_zys"),
-                        F.col("geom")["ring_offsets"].alias("_zoff"),
-                        F.col("geom")["bbox"].alias("_zbox"))
-    zc = explode_bbox_cells(zsel, "_zbox.minx", "_zbox.miny",
-                            "_zbox.maxx", "_zbox.maxy", level).drop("_zbox")
-    if broadcast_zones:
-        zc = F.broadcast(zc)
 
-    tsel = tiles.select("tile_id", "x0", "y0", "res", "res_y", "nx", "ny")
-    tile_cells = explode_bbox_cells(
-        tsel, "x0", "y0", "(x0 + res * nx)", "(y0 + res_y * ny)", level) \
-        .select("tile_id", "cell")
-
-    pairs = (tile_cells.join(zc, "cell", "inner")
-             .dropDuplicates(["tile_id", "_zid"]))
-    zones_per_tile = pairs.groupBy("tile_id").agg(
-        F.collect_list(F.struct("_zid", "_zxs", "_zys", "_zoff")).alias("_zones"))
-    return tiles.join(zones_per_tile, "tile_id", "inner")
+def _tile_zone_pixels(row, zone_layer) -> Iterator[tuple[int, np.ndarray]]:
+    """(zone_id, pixel indices) for every zone holding at least one pixel
+    CENTER of the tile ``row``; indices are row-major into its
+    ``values``. Candidate zones are those whose bbox overlaps the tile;
+    each then takes a bbox pre-filter over the pixel centers and the
+    exact even-odd ``points_in_rings`` test."""
+    entries, (zx0, zx1, zy0, zy1) = zone_layer
+    nx, ny = int(row["nx"]), int(row["ny"])
+    x0, y0 = float(row["x0"]), float(row["y0"])
+    res, ry = float(row["res"]), float(row["res_y"])
+    lon, lat = np.meshgrid(x0 + (np.arange(nx) + 0.5) * res,
+                           y0 + (np.arange(ny) + 0.5) * ry)
+    lon, lat = lon.ravel(), lat.ravel()
+    cand = np.flatnonzero((zx0 <= x0 + res * nx) & (zx1 >= x0)
+                          & (zy0 <= y0 + ry * ny) & (zy1 >= y0))
+    for i in cand:
+        zid, xs, ys, zo = entries[i]
+        box = ((lon >= zx0[i]) & (lon <= zx1[i])
+               & (lat >= zy0[i]) & (lat <= zy1[i]))
+        if not box.any():
+            continue
+        mask = _geom.points_in_rings(lon[box], lat[box], xs, ys, zo)
+        if mask.any():
+            yield zid, np.flatnonzero(box)[mask]
 
 
 def zonal_stats(tiles: DataFrame, zones: DataFrame, *,
-                zone_id_col: str = "zone_id", level: int = 7,
-                broadcast_zones: bool = True,
+                zone_id_col: str = "zone_id",
                 weight: str = "none") -> DataFrame:
     """Per-zone count/sum/mean/min/max/stddev of raster pixel values whose
     pixel CENTER falls in the zone (rasterstats default semantics).
+
+    The zone layer is collected to the driver and broadcast; the raster
+    stays distributed and never shuffles. Each tile picks its candidate
+    zones by bbox overlap inside the pixel kernel and emits one partial
+    row per (tile, zone); the per-zone aggregation is the plan's only
+    exchange.
 
     ``weight='sph_area'`` adds geodesic area weighting: each pixel carries
     its EXACT spherical area R²·Δλ·(sin(lat+res/2) − sin(lat−res/2)) m²
@@ -106,89 +120,30 @@ def zonal_stats(tiles: DataFrame, zones: DataFrame, *,
         raise ValueError(f"unknown weight {weight!r}")
     weighted = weight == "sph_area"
     tiles = _with_res_y(tiles)
-    if broadcast_zones:
-        # r6: the zone layer is broadcast-sized by contract on this route,
-        # so candidate selection happens INSIDE the pixel kernel against a
-        # rings broadcast (vectorized bbox overlap per tile) — the whole
-        # pair machinery (cover joins, pair dedup, collect_list, join
-        # back) and its 3-4 exchanges disappear from the plan; the only
-        # exchange left is the final per-zone aggregation. Partial rows
-        # are identical either way: the kernel skips empty masks, and the
-        # bbox-overlap candidates are a superset of every nonempty mask.
-        zrows = zones.select(F.col(zone_id_col).alias("_zid"),
-                             "geom").collect()  # collect-ok: zone layer broadcast-sized by contract (rings closure)
-        zentries = []
-        for r in zrows:
-            g = r["geom"]
-            xs = np.asarray(g["xs"], np.float64)
-            ys = np.asarray(g["ys"], np.float64)
-            zo = g["ring_offsets"]
-            zo = (np.asarray(zo, np.int64)
-                  if zo is not None and len(zo) > 2 else None)
-            zentries.append((int(r["_zid"]), xs, ys, zo))
-        zbox = (np.array([e[1].min() for e in zentries]),
-                np.array([e[1].max() for e in zentries]),
-                np.array([e[2].min() for e in zentries]),
-                np.array([e[2].max() for e in zentries]))
-        bc = tiles.sparkSession.sparkContext.broadcast((zentries, zbox))
-        tj = tiles
-    else:
-        bc = None
-        tj = _tiles_with_candidate_zones(tiles, zones, zone_id_col, level,
-                                         broadcast_zones)
+    bc = _zone_layer(zones, zone_id_col)
 
     def compute_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if bc is not None:
-            zent, (zx0, zx1, zy0, zy1) = bc.value
+        zone_layer = bc.value
         for pdf in batches:
             rows = []
             for _, row in pdf.iterrows():
                 vals = np.asarray(row["values"], np.float64)
-                nx, ny, res = int(row["nx"]), int(row["ny"]), float(row["res"])
-                ry = float(row["res_y"])
-                px = float(row["x0"]) + (np.arange(nx) + 0.5) * res
-                py = float(row["y0"]) + (np.arange(ny) + 0.5) * ry
-                lon, lat = np.meshgrid(px, py)
-                lon, lat = lon.ravel(), lat.ravel()
                 if weighted:
                     # Δλ comes from the x resolution, the latitude band
                     # edges from the y resolution (they differ on
                     # anisotropic rasters)
+                    res, ry = float(row["res"]), float(row["res_y"])
+                    ny = int(row["ny"])
+                    py = float(row["y0"]) + (np.arange(ny) + 0.5) * ry
                     r2 = _geom.EARTH_RADIUS_M * _geom.EARTH_RADIUS_M
                     wrow = (r2 * np.radians(res)
                             * (np.sin(np.radians(py + ry / 2.0))
                                - np.sin(np.radians(py - ry / 2.0))))
-                    w_full = np.repeat(wrow, nx)
-                else:
-                    w_full = None
-                if bc is not None:
-                    tx1 = float(row["x0"]) + res * nx
-                    ty1 = float(row["y0"]) + ry * ny
-                    cand = np.flatnonzero(
-                        (zx0 <= tx1) & (zx1 >= float(row["x0"]))
-                        & (zy0 <= ty1) & (zy1 >= float(row["y0"])))
-                    zone_iter = (zent[i] for i in cand)
-                else:
-                    zone_iter = (
-                        (int(z["_zid"]), np.asarray(z["_zxs"], np.float64),
-                         np.asarray(z["_zys"], np.float64),
-                         (np.asarray(z["_zoff"], np.int64)
-                          if z["_zoff"] is not None and len(z["_zoff"]) > 2
-                          else None))
-                        for z in row["_zones"])
-                for zid, xs, ys, zo in zone_iter:
-                    # bbox pre-filter before the exact PIP (bbox over the
-                    # ring concatenation == bbox over all rings)
-                    box = ((lon >= xs.min()) & (lon <= xs.max())
-                           & (lat >= ys.min()) & (lat <= ys.max()))
-                    if not box.any():
-                        continue
-                    mask = _geom.points_in_rings(lon[box], lat[box], xs, ys, zo)
-                    if not mask.any():
-                        continue
-                    v = vals[box][mask]
+                    w_full = np.repeat(wrow, int(row["nx"]))
+                for zid, idx in _tile_zone_pixels(row, zone_layer):
+                    v = vals[idx]
                     if weighted:
-                        wsub = w_full[box][mask]
+                        wsub = w_full[idx]
                         wa, ws = float(wsub.sum()), float((wsub * v).sum())
                     else:
                         wa = ws = 0.0
@@ -198,7 +153,7 @@ def zonal_stats(tiles: DataFrame, zones: DataFrame, *,
             yield pd.DataFrame(rows, columns=["zone_id", "cnt", "s", "s2",
                                               "mn", "mx", "wa", "ws"])
 
-    partials = tj.mapInPandas(compute_partials, schema=_PARTIAL_SCHEMA)
+    partials = tiles.mapInPandas(compute_partials, schema=_PARTIAL_SCHEMA)
 
     if weighted:
         out = (partials.groupBy("zone_id")
@@ -550,19 +505,18 @@ def map_algebra(a: DataFrame, b: DataFrame, fn, *,
 
 
 def zonal_histogram(tiles: DataFrame, zones: DataFrame, *,
-                    zone_id_col: str = "zone_id", level: int = 7,
-                    broadcast_zones: bool = True) -> DataFrame:
+                    zone_id_col: str = "zone_id") -> DataFrame:
     """Per-zone value histogram — the categorical-raster zonal family
     (ArcGIS ZonalStatistics MAJORITY/MINORITY/VARIETY, GRASS
     r.stats): one row per (zone, distinct value) with the pixel count.
-    Same candidate machinery and pixel-center-in-zone semantics as
-    `zonal_stats`; per-tile partial (zone, value) counts are built with
-    np.unique inside the kernel, so the shuffle carries one row per
-    distinct value per zone per tile, not per pixel. NaN pixels are
-    excluded. Use `zonal_majority` for the argmax rollup."""
+    Same route and pixel-center-in-zone semantics as `zonal_stats`: the
+    zone layer is collected and broadcast, the raster stays distributed.
+    Per-tile partial (zone, value) counts are built with np.unique
+    inside the kernel, so the one exchange carries one row per distinct
+    value per zone per tile, not per pixel. NaN pixels are excluded.
+    Use `zonal_majority` for the argmax rollup."""
     tiles = _with_res_y(tiles)
-    tj = _tiles_with_candidate_zones(tiles, zones, zone_id_col, level,
-                                     broadcast_zones)
+    bc = _zone_layer(zones, zone_id_col)
     part_schema = T.StructType([
         T.StructField("zone_id", T.LongType()),
         T.StructField("value", T.DoubleType()),
@@ -570,53 +524,33 @@ def zonal_histogram(tiles: DataFrame, zones: DataFrame, *,
     ])
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        zone_layer = bc.value
         for pdf in batches:
             rows = []
             for _, row in pdf.iterrows():
                 vals = np.asarray(
                     [np.nan if v is None else v for v in row["values"]],
                     np.float64)
-                nx, ny, res = int(row["nx"]), int(row["ny"]), float(row["res"])
-                ry = float(row["res_y"])
-                px = float(row["x0"]) + (np.arange(nx) + 0.5) * res
-                py = float(row["y0"]) + (np.arange(ny) + 0.5) * ry
-                lon, lat = np.meshgrid(px, py)
-                lon, lat = lon.ravel(), lat.ravel()
-                for z in row["_zones"]:
-                    xs = np.asarray(z["_zxs"], np.float64)
-                    ys = np.asarray(z["_zys"], np.float64)
-                    zo = z["_zoff"]
-                    zo = (np.asarray(zo, np.int64)
-                          if zo is not None and len(zo) > 2 else None)
-                    box = ((lon >= xs.min()) & (lon <= xs.max())
-                           & (lat >= ys.min()) & (lat <= ys.max()))
-                    if not box.any():
-                        continue
-                    mask = _geom.points_in_rings(lon[box], lat[box],
-                                                 xs, ys, zo)
-                    if not mask.any():
-                        continue
-                    v = vals[box][mask]
+                for zid, idx in _tile_zone_pixels(row, zone_layer):
+                    v = vals[idx]
                     v = v[~np.isnan(v)]
                     uniq, cnt = np.unique(v, return_counts=True)
                     for u, c in zip(uniq, cnt):
-                        rows.append((int(z["_zid"]), float(u), int(c)))
+                        rows.append((zid, float(u), int(c)))
             yield pd.DataFrame(rows, columns=["zone_id", "value", "n"])
 
-    return (tj.mapInPandas(partials, schema=part_schema)
+    return (tiles.mapInPandas(partials, schema=part_schema)
             .groupBy("zone_id", "value")
             .agg(F.sum("n").alias("n_pixels")))
 
 
 def zonal_majority(tiles: DataFrame, zones: DataFrame, *,
-                   zone_id_col: str = "zone_id", level: int = 7,
-                   broadcast_zones: bool = True) -> DataFrame:
+                   zone_id_col: str = "zone_id") -> DataFrame:
     """Per-zone MAJORITY / MINORITY / VARIETY over `zonal_histogram`
     (ties break to the SMALLEST value — deterministic where ArcGIS
     inherits scan order). Output: (zone_id, majority, majority_n,
     minority, minority_n, variety)."""
-    h = zonal_histogram(tiles, zones, zone_id_col=zone_id_col,
-                        level=level, broadcast_zones=broadcast_zones)
+    h = zonal_histogram(tiles, zones, zone_id_col=zone_id_col)
     return (h.groupBy("zone_id")
             .agg(F.min_by(F.col("value"),
                           F.struct((-F.col("n_pixels")).alias("a"),

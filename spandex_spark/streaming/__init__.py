@@ -1,3 +1,1 @@
 from spandex_spark.streaming.ingest import stream_geotag_pages  # noqa: F401
-from spandex_spark.streaming.geofence import (  # noqa: F401
-    zone_transitions, zone_transitions_batch)

@@ -99,9 +99,9 @@ class TestGeoTiff:
         write_geotiff(p, full[::-1], x0=-10.0, y0=-10.0, res=0.05)
         loaded = read_geotiff(spark, p, tile_rows=100, tile_cols=100)
         a = {r.zone_id: (r.px_count, round(r.px_sum, 9))
-             for r in zonal_stats(tiles, zones_df(spark), level=7).collect()}
+             for r in zonal_stats(tiles, zones_df(spark)).collect()}
         b = {r.zone_id: (r.px_count, round(r.px_sum, 9))
-             for r in zonal_stats(loaded, zones_df(spark), level=7).collect()}
+             for r in zonal_stats(loaded, zones_df(spark)).collect()}
         assert a == b
 
     def test_multi_strip_read(self, spark, tmp_path):

@@ -52,7 +52,7 @@ TEST_ONLY = {f"spandex_spark.{m}" for m in """
     operators.trajectory operators.unigram operators.viewshed
     operators.voronoi
     sources.geopackage sources.gpx sources.kml sources.mvt sources.warc
-    streaming.geofence streaming.ingest streaming.sessions
+    streaming.ingest streaming.sessions
     streaming.stateful
 """.split()}
 

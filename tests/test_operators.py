@@ -191,24 +191,6 @@ class TestKnn:
             for r in got:
                 assert want_map[(r.qid, r.rank)] == r.poi_id
 
-    def test_kernel_strategy_matches_broadcast(self, spark, fixture_dir):
-        poi = load(spark, fixture_dir, "poi")
-        gaz = load(spark, fixture_dir, "gazetteer")
-        q = gaz.select(F.col("place").alias("qid"), "lon", "lat")
-        a = {(r.qid, r.rank): r.poi_id for r in
-             knn_join(q, poi, k=3, query_id_col="qid", feature_id_col="poi_id",
-                      strategy="broadcast").collect()}
-        # kernel path needs a long query id — remap
-        q2 = gaz.select(F.col("poi_id_q").alias("qid"), "lon", "lat") \
-            if "poi_id_q" in gaz.columns else None
-        qn = gaz.withColumn("qid", F.monotonically_increasing_id())
-        b_rows = knn_join(qn.select("qid", "lon", "lat", "place"), poi, k=3,
-                          query_id_col="qid", feature_id_col="poi_id",
-                          strategy="kernel").collect()
-        name = {r.qid: r.place for r in qn.select("qid", "place").collect()}
-        b = {(name[r.qid], r.rank): r.poi_id for r in b_rows}
-        assert a == b
-
     def test_assume_disjoint_matches_default(self, spark, fixture_dir):
         pages = load(spark, fixture_dir, "pages")
         gaz = load(spark, fixture_dir, "gazetteer")

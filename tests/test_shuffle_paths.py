@@ -1,6 +1,7 @@
 """Non-broadcast (shuffle) paths must equal the broadcast paths — the
 large-polygon-layer / large-overlay-layer route used when the feature side
-doesn't fit in executor memory."""
+doesn't fit in executor memory — and the single-route overlay and zonal
+operators must equal brute-force numpy oracles on holed layers."""
 
 import os
 
@@ -194,35 +195,76 @@ class TestCellsKnn:
         assert out.count() == 300  # n_features rows per query
 
 
+def _rings(geom):
+    off = geom["ring_offsets"]
+    return (np.asarray(geom["xs"], np.float64),
+            np.asarray(geom["ys"], np.float64),
+            np.asarray(off, np.int64) if off is not None and len(off) > 2
+            else None)
+
+
 def test_overlay_refpoint_dedup_matches_shuffle_dedup(spark):
-    """The zero-shuffle reference-point pair dedup must equal the
-    dropDuplicates path — including holed/multipart overlays (where the
-    bbox-cover guarantee is what makes refpoint exact)."""
+    """The zero-shuffle reference-point pair dedup keeps every
+    intersecting (parcel, zone) pair exactly once with its exact area —
+    including holed overlays (where the bbox-cover guarantee is what
+    makes refpoint exact). Oracle: geom.rings_intersection_area over all
+    (parcel, zone) pairs; pairs whose bboxes miss have zero area."""
+    from spandex_spark import geom as G
     from spandex_spark.sources.grids import parcels_df, zones_df, donut_zones_df
+    parcels = [(r.parcel_id, _rings(r.geom), r.geom.bbox)
+               for r in parcels_df(spark).collect()]
     for ovl, oid in [(zones_df(spark), "zone_id"),
                      (donut_zones_df(spark), "dz_id")]:
-        a = {(r.parcel_id, r[oid], round(r.ix_area, 12)) for r in
-             proportion_overlap(parcels_df(spark), ovl,
-                                target_id_col="parcel_id", overlay_id_col=oid,
-                                keep_pairs=True, pair_dedup="refpoint").collect()}
-        b = {(r.parcel_id, r[oid], round(r.ix_area, 12)) for r in
-             proportion_overlap(parcels_df(spark), ovl,
-                                target_id_col="parcel_id", overlay_id_col=oid,
-                                keep_pairs=True, pair_dedup="shuffle").collect()}
-        assert a == b, oid
+        zones = [(r[oid], _rings(r.geom), r.geom.bbox)
+                 for r in ovl.select(oid, "geom").collect()]
+        want = set()
+        for pid, (pxs, pys, poff), pb in parcels:
+            for zid, (zxs, zys, zoff), zb in zones:
+                if (pb.maxx < zb.minx or zb.maxx < pb.minx
+                        or pb.maxy < zb.miny or zb.maxy < pb.miny):
+                    continue
+                area = G.rings_intersection_area(pxs, pys, poff,
+                                                 zxs, zys, zoff)
+                if area > 0.0:
+                    want.add((pid, zid, round(area, 12)))
+        got = [(r.parcel_id, r[oid], round(r.ix_area, 12)) for r in
+               proportion_overlap(parcels_df(spark), ovl,
+                                  target_id_col="parcel_id",
+                                  overlay_id_col=oid,
+                                  keep_pairs=True).collect()]
+        assert len(got) == len(set(got)), oid
+        assert set(got) == want, oid
 
 
 def test_zonal_shuffle_path_matches_broadcast(spark):
+    """zonal_stats over the holed donut zones, where a zone's bbox holds
+    pixels its mask drops, against numpy points_in_rings over every
+    pixel center of the raster."""
+    from spandex_spark import geom as G
     from spandex_spark.operators import zonal_stats
-    from spandex_spark.sources.grids import zones_df, raster_tiles_df
+    from spandex_spark.sources.grids import donut_zones_df, raster_tiles_df
     tiles = raster_tiles_df(spark)
-    a = {(r.zone_id, r.px_count, round(r.px_sum, 9)) for r in
-         zonal_stats(tiles, zones_df(spark), level=7,
-                     broadcast_zones=True).collect()}
-    b = {(r.zone_id, r.px_count, round(r.px_sum, 9)) for r in
-         zonal_stats(tiles, zones_df(spark), level=7,
-                     broadcast_zones=False).collect()}
-    assert a == b
+    lon, lat, val = [], [], []
+    for t in tiles.collect():
+        gx, gy = np.meshgrid(t.x0 + (np.arange(t.nx) + 0.5) * t.res,
+                             t.y0 + (np.arange(t.ny) + 0.5) * t.res)
+        lon.append(gx.ravel())
+        lat.append(gy.ravel())
+        val.append(np.asarray(t["values"], np.float64))
+    lon, lat, val = (np.concatenate(a) for a in (lon, lat, val))
+    want = {}
+    for z in donut_zones_df(spark).collect():
+        v = val[G.points_in_rings(lon, lat, *_rings(z.geom))]
+        if v.size:
+            want[z.dz_id] = (v.size, v.sum(), v.min(), v.max())
+    got = {r.dz_id: r for r in
+           zonal_stats(tiles, donut_zones_df(spark),
+                       zone_id_col="dz_id").collect()}
+    assert got.keys() == want.keys() and len(want) == 16
+    for zid, (n, total, lo, hi) in want.items():
+        r = got[zid]
+        assert (r.px_count, r.px_min, r.px_max) == (n, lo, hi), zid
+        assert r.px_sum == pytest.approx(total, rel=1e-12), zid
 
 
 class TestCellsNearestLine:
