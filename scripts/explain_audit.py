@@ -10,6 +10,22 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# Both cells nearest-neighbour routes (point kNN and nearest line) get
+# their candidates from the same pair table, built once per DISTINCT query
+# cell on the executors.
+_PAIR_TABLE_CHECKS = [
+    (r"Join \[_qcell", "queries join the (query cell, candidate cell) "
+     "pair table on _qcell; Spark picks broadcast or shuffle by size"),
+    (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython))",
+     "ZERO Python UDFs on the query stream"),
+    (r"^(?![\s\S]*MapInPandas[\s\S]*MapInPandas)", "at most one "
+     "MapInPandas"),
+    (r"MapInPandas[^\n]*\n[ :|+-]*(?:\*\(\d+\) )?HashAggregate\(keys="
+     r"\[_qcell#\d+L\], functions=\[\]", "the one MapInPandas builds the "
+     "pair table from the distinct _qcell aggregate: Python runs once per "
+     "distinct query cell"),
+]
+
 CHECKS = {
     "pip_tag (two-phase cell join)": [
         ("BroadcastHashJoin", "polygon side broadcast"),
@@ -28,12 +44,8 @@ CHECKS = {
     "overlay": [("BroadcastHashJoin", "overlay side broadcast"),
                 (r"least\(", "rect×rect fast path is pure JVM arithmetic "
                              "(LEAST/GREATEST inside codegen, no Python)")],
-    "knn cells (histogram two-job path)": [
-        (r"BroadcastHashJoin \[_qcell", "queries join the driver-built "
-         "(query cell, feature cell) pair table, broadcast, on _qcell"),
-        (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",
-         "ZERO Python operators — the pair table replaces the per-batch "
-         "candidate UDF"),
+    "knn cells (query-cell pair table)": [
+        *_PAIR_TABLE_CHECKS,
         ("HashAggregate|SortAggregate", "k=1 min_by map-side combine"),
     ],
     "nearest_road (linestring kernel)": [
@@ -45,8 +57,8 @@ CHECKS = {
                       ("HashAggregate", "hash aggregation"),
                       ("PushedFilters: \\[IsNotNull\\(l_quantity\\), GreaterThan",
                        "filter pushed to parquet scan")],
-    "nearest_road (cells two-job path)": [
-        ("Generate explode", "candidate cells explode (broadcast-index box)"),
+    "nearest_road cells (query-cell pair table)": [
+        *_PAIR_TABLE_CHECKS,
         ("HashAggregate", "stage-1 min-per-(point,line) is HASH aggregate "
                           "with map-side combine — SortAggregate only ever "
                           "sees the tiny per-line reduction"),
@@ -584,7 +596,7 @@ def main():
     plans["overlay"] = proportion_overlap(
         parcels_df(spark), zones_df(spark), target_id_col="parcel_id",
         overlay_id_col="zone_id", level=8)
-    plans["knn cells (histogram two-job path)"] = knn_join(
+    plans["knn cells (query-cell pair table)"] = knn_join(
         pts, gazetteer_grid_df(spark), k=1,
         query_id_col="c_custkey", feature_id_col="poi_k",
         strategy="cells", level=7)
@@ -597,7 +609,7 @@ def main():
     plans["q1 relational"] = (
         li.filter(F.col("l_quantity") > 10)
         .groupBy("l_returnflag").agg(F.sum("l_extendedprice").alias("rev")))
-    plans["nearest_road (cells two-job path)"] = nearest_line_join(
+    plans["nearest_road cells (query-cell pair table)"] = nearest_line_join(
         pts, roads_df(spark), k=1, point_id_col="c_custkey",
         line_id_col="road_id", strategy="cells", level=7)
     from spandex_spark.operators.timeseries import asof_join

@@ -128,19 +128,22 @@ def minhash_lsh_pairs(df: DataFrame, *, text_col: str = "text",
                   F.col("_band"),
                   F.slice("signature", F.col("_band") * rows_per_band + 1,
                           rows_per_band).cast("string"))))
-    # ONE bucket exchange (r6): aggregate each (band, bucket) to a sorted
-    # member array — the partial/final hash aggregation replaces the old
-    # window-cap + persist + self-join chain (3 exchanges + a cache) —
-    # then cap runaway buckets (boilerplate mega-clusters) by taking the
-    # first max_bucket members ordered by id (exactly the old window cap),
-    # and emit i<j pairs by a double posexplode, all in the same stage.
+    # ONE bucket exchange (r6): cap runaway buckets (boilerplate
+    # mega-clusters) to their first max_bucket members ordered by (id,
+    # signature) BEFORE aggregating — a row_number filter Spark plans as
+    # a WindowGroupLimit, so no task ever buffers a whole mega-bucket —
+    # then aggregate each (band, bucket) to a sorted member array and emit
+    # i<j pairs by a double posexplode, all in the same stage.
     from spandex_spark.functions.partitioning import pre_group_repartition
+    w = Window.partitionBy("_band", "_bhash").orderBy(id_col, "signature")
     buckets = (pre_group_repartition(banded, "_band", "_bhash")
+               .withColumn("_pos", F.row_number().over(w))
+               .filter(F.col("_pos") <= max_bucket)
                .groupBy("_band", "_bhash")
-               .agg(F.slice(F.array_sort(F.collect_list(
+               .agg(F.array_sort(F.collect_list(
                    F.struct(F.col(id_col).alias("_id"),
-                            F.col("signature").alias("_sig")))),
-                   1, max_bucket).alias("_members")))
+                            F.col("signature").alias("_sig"))))
+                   .alias("_members")))
     pairs = (buckets
              .select(F.posexplode("_members").alias("_i", "_a"), "_members")
              .select("_i", "_a", F.posexplode("_members").alias("_j", "_b"))

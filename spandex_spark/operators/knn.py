@@ -9,11 +9,10 @@ strategies:
   by JVM built-ins (stays inside whole-stage codegen; zero Python), then
   ``row_number() over (partition by query order by dist, id) <= k``.
 * ``cells`` (both sides large): a feature cell histogram bounds each
-  query cell's kth distance; the driver enumerates the candidate feature
-  cells per query cell into a broadcast pair table, queries hash-join it
-  on their cell, and the same window top-k ranks the candidates. Exact,
-  no cross product. Past the pair-table caps a pandas UDF enumerates
-  the same candidate cells per Arrow batch instead.
+  query cell's kth distance; the executors enumerate the candidate
+  feature cells of each DISTINCT occupied query cell into a pair table,
+  queries join it on their cell, and the same window top-k ranks the
+  candidates. Exact, no cross product, one route at every size.
 
 ``nearest_feature_column`` is the fused-pipeline form of k=1 against a
 collected feature set.
@@ -22,6 +21,7 @@ collected feature set.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -433,8 +433,8 @@ def _candidate_lists_for_coarse(hist, sparse, ux: np.ndarray, uy: np.ndarray,
     search box is derived at the coarse histogram level from the query
     cell's PARENT (a superset for every point of the child); the
     cell-level prune then runs against the qlevel cell box. Shared by the
-    pandas-UDF route and the driver-side pair-table route; exactness
-    lives here once."""
+    kNN and nearest-line cells strategies through _candidate_pairs;
+    exactness lives here once."""
     s = sparse.level - hist.level
     shift = qlevel - hist.level
     wrap = metric == "haversine"
@@ -522,43 +522,25 @@ def _candidate_lists_for_coarse(hist, sparse, ux: np.ndarray, uy: np.ndarray,
     return lists
 
 
-def _candidate_cells_udf(bc, k: int, metric: str, qlevel: int | None = None):
-    """Per-query candidate cell list (array<long>): computed once per
-    DISTINCT qlevel query cell per Arrow batch and fanned back to rows.
-    ``bc`` is a Spark Broadcast of (hist, sparse) — deserialized once per
-    executor, not pickled into each task closure. Fallback route when the
-    driver-side pair table would be too large (see _ring_candidates)."""
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _cand(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        if len(lon) == 0:
-            return pd.Series([], dtype=object)
-        hist, sparse = bc.value
-        ql = qlevel if qlevel is not None else hist.level + _QLEVEL_EXTRA
-        nq = np.int64(1 << ql)
-        gx, gy = _cells.grid_coords(lon.to_numpy(np.float64),
-                                    lat.to_numpy(np.float64), ql)
-        key = gy * nq + gx
-        uniq, inverse = np.unique(key, return_inverse=True)
-        uy = (uniq // nq).astype(np.int64)
-        ux = (uniq % nq).astype(np.int64)
-        lists = [a[0].tolist() for a in _candidate_lists_for_coarse(
-            hist, sparse, ux, uy, ql, k, metric)]
-        return pd.Series([lists[i] for i in inverse])
-
-    return _cand
-
-
 _HIST_MAX_LEVEL = 11   # coarse radius-oracle grid: <= ~33 MB cropped dense
 _CELLS_MAX_LEVEL = 20  # fine join key: row-major key fits comfortably in i64
 
 
-def _build_index(hist_rows, level: int):
-    """(coarse dense histogram, fine sparse cell list) pair from collected
-    (cell, count[, minx, maxx, miny, maxy]) rows — the local form consumed
-    by the driver-side pair-table route; build_cell_index wraps it in a
-    Spark broadcast. The optional per-cell feature bbox tightens the
-    candidate prune (distance bounds over the actual feature spread)."""
+def build_cell_index(spark, hist_rows, level: int):
+    """Build the (coarse dense histogram, fine sparse cell list) pair from
+    collected (cell, count[, minx, maxx, miny, maxy]) rows and ship it as
+    ONE Spark broadcast. The optional per-cell feature bbox tightens the
+    candidate prune (distance bounds over the actual feature spread).
+    Shared by the point kNN cells strategy and the nearest-line cells
+    strategy (operators/lines.py).
+
+    Measured broadcast size (pickled, BENCH/BASELINE.md): ~66 B per
+    OCCUPIED cell, independent of level — 0.28 MB for 1M lattice features
+    (2k cells), 62-66 MB worst-case for 1M uniformly scattered features at
+    level 11-15. Memory is O(min(#features, 4^level)): beyond ~10M
+    scattered features choose a coarser ``level`` (more candidates per
+    cell, bounded index) — the coarse histogram is capped at
+    _HIST_MAX_LEVEL regardless."""
     carr = np.array([r[0] for r in hist_rows], dtype=np.int64)
     cnts = np.array([r[1] for r in hist_rows], dtype=np.int64)
     fbox = (tuple(np.array([r[i] for r in hist_rows], dtype=np.float64)
@@ -580,57 +562,64 @@ def _build_index(hist_rows, level: int):
         hist = _CellHistogram(np.empty(0, np.int64), np.empty(0, np.int64),
                               np.empty(0, np.int64), hlevel)
     sparse = _SparseCells(fx, fy, level, cnts, fbox=fbox)
-    return hist, sparse
+    return spark.sparkContext.broadcast((hist, sparse))
 
 
-def build_cell_index(spark, hist_rows, level: int):
-    """Build the (coarse dense histogram, fine sparse cell list) pair from
-    collected (cell, count) rows and ship it as ONE Spark broadcast.
-    Shared by the point kNN cells strategy and the nearest-line cells
-    strategy (operators/lines.py).
-
-    Measured broadcast size (pickled, BENCH/BASELINE.md): ~66 B per
-    OCCUPIED cell, independent of level — 0.28 MB for 1M lattice features
-    (2k cells), 62-66 MB worst-case for 1M uniformly scattered features at
-    level 11-15. Memory is O(min(#features, 4^level)): beyond ~10M
-    scattered features choose a coarser ``level`` (more candidates per
-    cell, bounded index) — the coarse histogram is capped at
-    _HIST_MAX_LEVEL regardless."""
-    return spark.sparkContext.broadcast(_build_index(hist_rows, level))
-
-
-_MAX_PAIR_ROWS = 1_000_000    # driver pair-table cap: the table ships as
-                              # a LocalRelation inside task binaries
-                              # (~24 B/row), so keep it tens of MB at most
-_MAX_COARSE_ENUM = 262_144    # bbox-enumeration cap (cells; 512x512 box)
 _DMAX_REL_SLACK = 1e-9        # pair-table bound widening (knn_join)
 _QLEVEL_EXTRA = 3             # query-side grouping: hist.level + 3 (8x8
                               # children per coarse cell) tightens the
                               # position-uncertainty margin of the prune
 
 
+def _candidate_pairs(q: DataFrame, lon: str, lat: str, bc, *, k: int,
+                     metric: str) -> DataFrame:
+    """``q`` fanned out to its candidate fine cells: one row per (query
+    row, candidate ``_cell``) carrying the query cell's kth-distance upper
+    bound ``_dmax``. ``bc`` is the Spark broadcast of (hist, sparse).
+
+    The pair table has one row per (DISTINCT query cell at hist.level +
+    _QLEVEL_EXTRA, candidate fine cell, _dmax) and is built on the
+    executors: the distinct query cells feed a mapInPandas that runs
+    _candidate_lists_for_coarse against the broadcast index, so Python
+    runs once per distinct query cell, never on the query row stream.
+    Queries join it on ``_qcell``; Spark's planner and AQE pick broadcast
+    or shuffle for that join by size, so there is no cap and no second
+    route."""
+    hist, _ = bc.value
+    qlevel = hist.level + _QLEVEL_EXTRA
+    qc = q.withColumn("_qcell", _cell_of_jvm(lon, lat, qlevel))
+
+    def _enumerate(batches):
+        hist, sparse = bc.value
+        for pdf in batches:
+            qcell = pdf["_qcell"].to_numpy(np.int64)
+            ux, uy = _cells.cell_xy(qcell)
+            lists = _candidate_lists_for_coarse(hist, sparse, ux, uy, qlevel,
+                                                k, metric)
+            counts = np.array([a.shape[0] for a, _ in lists], np.int64)
+            yield pd.DataFrame({
+                "_qcell": np.repeat(qcell, counts),
+                "_cell": (np.concatenate([a for a, _ in lists])
+                          if counts.sum() else np.empty(0, np.int64)),
+                "_dmax": np.repeat(np.array([d for _, d in lists],
+                                            np.float64), counts),
+            })
+
+    pairs = (qc.select("_qcell").distinct()
+             .mapInPandas(_enumerate, "_qcell long, _cell long, _dmax double"))
+    return qc.join(pairs, "_qcell").drop("_qcell")
+
+
 def _ring_candidates(q: DataFrame, f: DataFrame, *, k: int, level: int,
                      metric: str = "haversine") -> DataFrame:
-    """Cells-strategy candidate pairs in exactly THREE (small) Spark jobs:
+    """Cells-strategy candidate pairs in TWO Spark jobs:
 
-    job 1  feature cell histogram at the FINE level (groupBy(cell).count()
-           → driver; one row per non-empty cell);
-    job 2  query lon/lat EXTENT (1-row min/max aggregate — the coarse
-           cells are enumerated from the bbox on the driver; a superset
-           of the occupied cells is exact since pair rows for empty
-           cells never match);
-    job 3  queries fan out to candidate fine cells via a BROADCAST
-           (coarse cell → fine cell) pair table computed once on the
-           driver — pure JVM codegen, no Python on the query stream —
-           then hash-join the feature side on the fine cell. The caller's
-           window top-k runs in the same job.
-
-    The pair-table route replaces the per-batch pandas UDF (r6: the UDF's
-    ArrowEvalPython was the only Python stage of the strategy — guide
-    §4.1); the per-coarse-cell enumeration is the SAME code either way
-    (_candidate_lists_for_coarse), so candidate sets are identical. When
-    the pair table would exceed _MAX_PAIR_ROWS (huge occupied extents at
-    fine levels), the UDF route is used instead and job 2 is skipped.
+    job 1  feature cell histogram at the FINE level (groupBy(cell) count
+           and per-cell feature bbox → driver; one row per non-empty
+           cell), shipped back as one broadcast index;
+    job 2  the caller's action: the pair table of the occupied query
+           cells (_candidate_pairs), the feature side hash-joined on the
+           fine cell, and the caller's window top-k.
 
     The radius search runs on a cropped dense histogram at
     min(level, 11); candidate enumeration runs on a SORTED SPARSE list of
@@ -643,80 +632,12 @@ def _ring_candidates(q: DataFrame, f: DataFrame, *, k: int, level: int,
     """
     if level > _CELLS_MAX_LEVEL:
         raise ValueError(f"cells strategy supports level <= {_CELLS_MAX_LEVEL}")
-    spark = q.sparkSession
     fc = f.withColumn("_cell", _cell_of_jvm("_flon", "_flat", level))
-    # The two index-building jobs are independent — overlap them from a
-    # 2-thread pool so the second job back-fills executors freed by the
-    # first's tail (guide §2.6). Query cells come by EXTENT, not by a
-    # distinct scan: any SUPERSET of the occupied query cells is exact
-    # (pair rows for empty cells never match), and a min/max aggregate is
-    # one cheap partial-agg shuffle where a distinct through an upstream
-    # round-robin repartition measured ~7x slower (its second exchange;
-    # see OPTIMIZATION_r06.md).
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_rows = pool.submit(
-            lambda: fc.groupBy("_cell").agg(
-                F.count(F.lit(1)), F.min("_flon"), F.max("_flon"),
-                F.min("_flat"), F.max("_flat")).collect())  # collect-ok: O(occupied cells) histogram (+feature bbox per cell) -> index
-        f_ext = pool.submit(
-            lambda: q.agg(F.min("_qlon"), F.max("_qlon"),
-                          F.min("_qlat"), F.max("_qlat")).collect()[0])  # collect-ok: 1-row extent aggregate
-        rows = f_rows.result()
-        ext = f_ext.result()
-    hist, sparse = _build_index(rows, level)
-    qlevel = hist.level + _QLEVEL_EXTRA
-    n_box = 0
-    if ext[0] is not None:
-        # walk qlevel down until the bbox enumeration fits the cap
-        while True:
-            gx0, gy0 = _cells.grid_coords(np.array([ext[0]]),
-                                          np.array([ext[2]]), qlevel)
-            gx1, gy1 = _cells.grid_coords(np.array([ext[1]]),
-                                          np.array([ext[3]]), qlevel)
-            n_box = int(gx1[0] - gx0[0] + 1) * int(gy1[0] - gy0[0] + 1)
-            if n_box <= _MAX_COARSE_ENUM or qlevel <= hist.level:
-                break
-            qlevel -= 1
-    if 0 < n_box <= _MAX_COARSE_ENUM:
-        ux, uy = np.meshgrid(np.arange(gx0[0], gx1[0] + 1, dtype=np.int64),
-                             np.arange(gy0[0], gy1[0] + 1, dtype=np.int64))
-        ux, uy = ux.ravel(), uy.ravel()
-        qcells = _cells.xy_to_cell(ux, uy, qlevel).tolist()
-        lists = _candidate_lists_for_coarse(hist, sparse, ux, uy, qlevel,
-                                            k, metric)
-        n_pairs = int(sum(a.shape[0] for a, _ in lists))
-    elif n_box == 0:
-        qcells, lists, n_pairs = [], [], 0
-    else:
-        # huge query extent at a fine histogram level: fall back to the
-        # per-row distinct inside the pandas UDF route
-        qcells, lists, n_pairs = [], [], _MAX_PAIR_ROWS + 1
-    if n_pairs <= _MAX_PAIR_ROWS:
-        # each pair row also carries D = the per-query-cell kth-distance
-        # UPPER bound from the prune: knn_join filters dist <= D in
-        # codegen BEFORE the top-k window, so non-winners never enter the
-        # sort/exchange (exact: every true top-k distance is <= D).
-        # Built as numpy arrays → pandas → Arrow: ~2x faster to ship than
-        # a list of Python tuples (row-pickle path).
-        counts = np.array([a.shape[0] for a, _ in lists], dtype=np.int64)
-        pdf = pd.DataFrame({
-            "_qcell": np.repeat(np.asarray(qcells, np.int64), counts),
-            "_cell": (np.concatenate([a for a, _ in lists])
-                      if counts.sum() else np.empty(0, np.int64)),
-            "_dmax": np.repeat(np.array([d for _, d in lists], np.float64),
-                               counts),
-        })
-        pairs_df = spark.createDataFrame(pdf, "_qcell long, _cell long, _dmax double")
-        qcell_expr = _cell_of_jvm("_qlon", "_qlat", qlevel)
-        qc = (q.withColumn("_qcell", qcell_expr)
-              .join(F.broadcast(pairs_df), "_qcell", "inner")
-              .drop("_qcell"))
-    else:
-        bc = spark.sparkContext.broadcast((hist, sparse))
-        cand_cells = _candidate_cells_udf(bc, k, metric, qlevel=qlevel)
-        qc = (q.withColumn("_cell", F.explode(cand_cells(F.col("_qlon"),
-                                                         F.col("_qlat")))))
+    rows = fc.groupBy("_cell").agg(
+        F.count(F.lit(1)), F.min("_flon"), F.max("_flon"),
+        F.min("_flat"), F.max("_flat")).collect()  # collect-ok: O(occupied cells) histogram (+feature bbox per cell) -> index
+    bc = build_cell_index(q.sparkSession, rows, level)
+    qc = _candidate_pairs(q, "_qlon", "_qlat", bc, k=k, metric=metric)
     return qc.join(fc, "_cell", "inner").drop("_cell")
 
 
@@ -724,7 +645,3 @@ def _cell_of_jvm(lon, lat, level: int):
     from spandex_spark.functions.cells_sql import cell_of_expr
     return cell_of_expr(lon, lat, level)
 
-
-from pyspark.sql import types as T  # noqa: E402
-from pyspark.sql.functions import pandas_udf  # noqa: E402
-import pandas as pd  # noqa: E402

@@ -15,12 +15,14 @@ Nearest-line join has two strategies (mirroring operators/knn.py):
   stream.
 * ``cells`` — the BIG-both-sides path (any k): lines explode into SEGMENTS
   with their exact covering cells (cells.cover_segment, Liang-Barsky), a
-  distinct-line INDICATOR histogram drives the same two-job
-  broadcast-index plan as knn cells, and the candidate (point, segment)
-  join computes the exact point-to-segment distance with PURE JVM
-  arithmetic (fixed-width segment rows — no geometry arrays cross the
-  shuffle). k=1 reduces via min_by with exact (dist, line_id) tie-break;
-  k>1 via a window top-k over the tiny per-(point, line) reduction.
+  distinct-line INDICATOR histogram builds the same broadcast index as
+  knn cells, points join the same per-distinct-query-cell pair table
+  (Python once per distinct query cell, none on the point stream), and
+  the candidate (point, segment) join computes the exact
+  point-to-segment distance with PURE JVM arithmetic (fixed-width
+  segment rows — no geometry arrays cross the shuffle). k=1 reduces via
+  min_by with exact (dist, line_id) tie-break; k>1 via a window top-k
+  over the tiny per-(point, line) reduction.
 """
 
 from __future__ import annotations
@@ -280,11 +282,12 @@ def _nearest_line_cells(points: DataFrame, lines: DataFrame, *, k: int,
     """Big-both-sides nearest-line join, exactly TWO Spark jobs:
 
     job 1  distinct-line indicator histogram per cell -> driver;
-    job 2  points emit candidate cells from the broadcast index (planar
+    job 2  points join the candidate pair table of their distinct query
+           cells (knn._candidate_pairs over the broadcast index; planar
            radius math: a covered cell that >= k distinct lines all touch
            bounds the kth line distance by the cell's far corner, because
-           the cover is exact — cells.cover_segment), explode, equi-join
-           the segment table on cell, exact JVM point-to-segment distance,
+           the cover is exact — cells.cover_segment), equi-join the
+           segment table on cell, exact JVM point-to-segment distance,
            then min_by (k=1) or window top-k (k>1).
 
     Exact for any k under the planar (degree) metric. The k>1 subtlety: a
@@ -300,7 +303,7 @@ def _nearest_line_cells(points: DataFrame, lines: DataFrame, *, k: int,
     PostGIS analog: `<->` against a line layer of any size.
     """
     from spandex_spark.operators.knn import (build_cell_index,
-                                             _candidate_cells_udf,
+                                             _candidate_pairs,
                                              _CELLS_MAX_LEVEL)
     if level > _CELLS_MAX_LEVEL:
         raise ValueError(f"cells strategy supports level <= {_CELLS_MAX_LEVEL}")
@@ -321,12 +324,11 @@ def _nearest_line_cells(points: DataFrame, lines: DataFrame, *, k: int,
             .agg(F.when(F.count_distinct("_lid") >= k, F.lit(k))
                  .otherwise(F.lit(0)).alias("_cnt")).collect())  # collect-ok: O(occupied cells) indicator histogram -> broadcast index
     bc = build_cell_index(spark, rows, level)
-    cand_cells = _candidate_cells_udf(bc, k, "planar")
     q = points.select(F.col(point_id_col).alias("_pid"),
                       F.col(lon_col).alias("_plon"),
                       F.col(lat_col).alias("_plat"))
-    qc = q.withColumn("_cell", F.explode(cand_cells(F.col("_plon"),
-                                                    F.col("_plat"))))
+    qc = _candidate_pairs(q, "_plon", "_plat", bc, k=k,
+                          metric="planar").drop("_dmax")
     cand = qc.join(segs, "_cell").drop("_cell")
     # exact point-to-segment distance, pure JVM codegen (same arithmetic
     # as geom.points_to_linestring_dist)

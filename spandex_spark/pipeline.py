@@ -28,9 +28,7 @@ def ingest_pages(raw: DataFrame, *, extract: bool = True,
     2. ``dedup_urls``: canonical-URL exact dedup — `normalize_url`
        collapses case/default-port/fragment variants, then ONE
        min_by-groupBy keeps the EARLIEST fetch per canonical url (the
-       recrawl rule, same semantics as streaming
-       `dedup_first_seen(strategy='earliest')` — batch and stream agree
-       by construction).
+       recrawl rule: the first snapshot of a url wins).
     3. ``dedup_lines``: corpus-wide C4-style line dedup
        (`line_dedup(order_col=warc_ts)`, two more shuffles) — off by
        default; it REWRITES text of boilerplate-carrying pages, which

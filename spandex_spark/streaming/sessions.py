@@ -2,7 +2,7 @@
 `operators/timeseries.py::sessionize` (gap-split sessions), emitting a
 session row when the session CLOSES (no later event can extend it).
 
-Two strategies, the `streaming/stateful.py::dedup_first_seen` shape:
+Two strategies, a native state-store path and a custom-state path:
 
 * ``'builtin'`` — Spark's native ``session_window`` aggregation: pure
   JVM state store, vectorized, merges out-of-order events within the

@@ -54,6 +54,26 @@ class TestMinhash:
         if (0, 2) in verified:
             assert 0.5 < verified[(0, 2)] < 1.0
 
+    def test_max_bucket_keeps_smallest_ids_and_caps_before_aggregating(
+            self, spark):
+        # 60 identical documents land in one bucket per band; max_bucket=5
+        # keeps the 5 smallest ids, so exactly their 10 pairs come out
+        base = _docs(spark).filter("doc_id = 0").first().text
+        ids = [100 + (i * 37) % 60 for i in range(60)]
+        docs = spark.createDataFrame([(i, base) for i in ids],
+                                     ["doc_id", "text"])
+        pairs = minhash_lsh_pairs(docs, num_hashes=64, bands=32, max_bucket=5)
+        got = sorted((r.id_a, r.id_b) for r in pairs.collect())
+        assert got == [(a, b) for a in range(100, 105)
+                       for b in range(a + 1, 105)]
+        # the cap runs below (before) every collect_list aggregate, so no
+        # task buffers a whole bucket
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0].splitlines()
+        cap = [i for i, ln in enumerate(final) if "WindowGroupLimit" in ln]
+        agg = [i for i, ln in enumerate(final) if "collect_list" in ln]
+        assert cap and agg and max(agg) < min(cap)
+
 
 class TestSimhash:
     def test_exact_and_near(self, spark):

@@ -53,7 +53,6 @@ TEST_ONLY = {f"spandex_spark.{m}" for m in """
     operators.voronoi
     sources.geopackage sources.gpx sources.kml sources.mvt sources.warc
     streaming.ingest streaming.sessions
-    streaming.stateful
 """.split()}
 
 

@@ -2,7 +2,8 @@
 against the exact broadcast strategy: clustered + outlier feature layouts,
 mixed metrics/levels/k. Guards the r6 candidate machinery (pair table,
 interval-haversine prune, kth-distance cap) against layouts the fixture
-grids never produce."""
+grids never produce, plus a world-extent input checked against the
+brute-force oracle."""
 
 import numpy as np
 from pyspark.sql import functions as F  # noqa: F401
@@ -45,3 +46,31 @@ class TestCellsFuzz:
             ra = sorted((r["qid"], r["rank"], r["fid"]) for r in a.collect())
             rb = sorted((r["qid"], r["rank"], r["fid"]) for r in b.collect())
             assert ra == rb, (nf, nq, k, level, metric)
+
+    def test_world_extent_equals_bruteforce(self, spark):
+        # Queries and features spread over the whole globe at a fine
+        # level: the occupied query cells number in the thousands and the
+        # query bounding box is every cell of the level. Checked against
+        # the brute-force haversine oracle.
+        from spandex_spark.fixtures import expected_knn
+        rng = np.random.default_rng(2024)
+        nq, nf, k = 3000, 5000, 3
+        qlon, flon = rng.uniform(-180, 180, nq), rng.uniform(-180, 180, nf)
+        qlat, flat = rng.uniform(-85, 85, nq), rng.uniform(-85, 85, nf)
+        fids = np.arange(nf, dtype=np.int64)
+        feats = spark.createDataFrame(
+            [(int(i), float(a), float(b))
+             for i, a, b in zip(fids, flon, flat)],
+            "fid long, lon double, lat double")
+        qs = spark.createDataFrame(
+            [(int(i), float(a), float(b))
+             for i, (a, b) in enumerate(zip(qlon, qlat))],
+            "qid long, lon double, lat double")
+        got = sorted((r["qid"], r["rank"], r["fid"], r["dist_m"]) for r in
+                     knn_join(qs, feats, k=k, query_id_col="qid",
+                              feature_id_col="fid", strategy="cells",
+                              level=13).collect())
+        want = expected_knn(qlon, qlat, flon, flat, fids, k)
+        assert [g[:3] for g in got] == [w[:3] for w in want]
+        np.testing.assert_allclose([g[3] for g in got], [w[3] for w in want],
+                                   rtol=1e-9, atol=1e-6)

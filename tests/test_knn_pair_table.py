@@ -1,10 +1,11 @@
-"""The r6 driver-side (coarse cell → candidate fine cells) pair-table
-route of the kNN cells strategy must produce exactly the rows of the
-pandas-UDF route it replaced (same _candidate_lists_for_coarse, so the
-candidate sets are identical by construction — this guards the plumbing:
-coarse-cell expr parity, join fan-out, empty-list drops)."""
+"""The kNN cells strategy's pair table (one row per distinct query cell,
+candidate fine cell and kth-distance bound, built on the executors) must
+give exactly the rows of the broadcast cross join: this guards the
+plumbing (query-cell expr parity, join fan-out, empty-list drops, the
+_dmax filter) as well as the candidate prune."""
 
 import importlib
+import re
 
 from pyspark.sql import functions as F
 
@@ -14,27 +15,23 @@ from spandex_spark.sources.grids import derived_points, gazetteer_grid_df
 knnmod = importlib.import_module("spandex_spark.operators.knn")
 
 
-def _rows(spark, metric, k=3, level=7):
+def _rows(spark, metric, strategy, k=3, level=7):
     pts = derived_points(
         spark.range(500).select(F.col("id").alias("pt_id")), "pt_id")
     out = knn_join(pts, gazetteer_grid_df(spark), k=k,
                    query_id_col="pt_id", feature_id_col="poi_k",
-                   strategy="cells", level=level, metric=metric)
+                   strategy=strategy, level=level, metric=metric)
     return sorted((r["pt_id"], r["rank"], r["poi_k"], round(r["dist_m"], 9))
                   for r in out.collect())
 
 
 class TestPairTableRoute:
     def test_matches_udf_fallback_both_metrics(self, spark):
+        # the cells route against the exact broadcast cross join, k=3
         for metric in ("planar", "haversine"):
-            fast = _rows(spark, metric)
-            orig = knnmod._MAX_PAIR_ROWS
-            knnmod._MAX_PAIR_ROWS = -1  # force the UDF fallback
-            try:
-                slow = _rows(spark, metric)
-            finally:
-                knnmod._MAX_PAIR_ROWS = orig
-            assert fast == slow and len(fast) == 1500
+            cells = _rows(spark, metric, "cells")
+            exact = _rows(spark, metric, "broadcast")
+            assert cells == exact and len(cells) == 1500
 
     def test_haversine_prune_vs_bruteforce(self, spark):
         # the r6 great-circle cell prune must never drop a true winner:
@@ -103,3 +100,32 @@ class TestPairTableRoute:
                         feature_id_col="fid", strategy="cells", level=7,
                         metric="planar").collect()]
         assert got == [(1, 1, 7, dx * dx + dy * dy)]
+
+    def test_cells_plans_run_python_once_per_distinct_query_cell(self, spark):
+        # Both cells routes: no Python UDF on the query stream, and exactly
+        # one MapInPandas, fed by the distinct-query-cell aggregate. The
+        # nearest-line segment cover UDF runs only in the build plan of its
+        # cached segment table, which _executed cuts.
+        from test_tag_rect_fastpath import _executed
+        from spandex_spark.operators.lines import nearest_line_join
+        from spandex_spark.sources.grids import roads_df
+        pts = derived_points(
+            spark.range(300).select(F.col("id").alias("pt_id")), "pt_id")
+        plans = {
+            "knn": knn_join(pts, gazetteer_grid_df(spark), k=3,
+                            query_id_col="pt_id", feature_id_col="poi_k",
+                            strategy="cells", level=7),
+            "nearest_line": nearest_line_join(
+                pts, roads_df(spark), k=1, point_id_col="pt_id",
+                line_id_col="road_id", strategy="cells", level=7),
+        }
+        for name, df in plans.items():
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            final = _executed(plan.split("== Initial Plan ==")[0]).splitlines()
+            assert not any(re.search(r"(Arrow|Batch)EvalPython", ln)
+                           for ln in final), name
+            at = [i for i, ln in enumerate(final) if "MapInPandas" in ln]
+            assert len(at) == 1, name
+            assert re.search(r"HashAggregate\(keys=\[_qcell#\d+L\], "
+                             r"functions=\[\]", final[at[0] + 1]), name
