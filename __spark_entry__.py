@@ -68,8 +68,9 @@ def _q_pip_tag_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1/E1 on POLYGONs WITH INTERIOR RINGS: donut zone layer (4-deg
     squares, centered 2-deg holes). A point in a hole must tag NULL —
     the even-odd multi-ring PIP (geom.points_in_rings) and the hole-aware
-    cell covering (cells.cover_polygon with ring_offsets) are both on the
-    hook. Oracle is closed-form outer-minus-hole rectangle arithmetic."""
+    cell cover (cells.cover_polygon_classified with ring_offsets) are
+    both on the hook. Oracle is closed-form outer-minus-hole rectangle
+    arithmetic."""
     from spandex_spark.operators import tag_points
     from spandex_spark.sources.grids import donut_zones_df
     pts = derived_points(_t(spark, sf_dir, "customer").select("c_custkey"),

@@ -11,6 +11,11 @@ both directions, deterministic, sortable, prefix-salt-able.
 This is the replacement for the reference's GiST R-tree index
 (spandex/io.py geometry-index DDL; SURVEY.md O11): the ``cell`` column IS
 the spatial index, and spatial joins become Catalyst equi-joins on it.
+
+A polygon's cover (:func:`cover_polygon_classified`) is one array pass
+over its bbox cells: the cells an edge meets are its fringe, and the
+others whose centre is inside are FULL — no point in them needs an exact
+refine.
 """
 
 from __future__ import annotations
@@ -121,13 +126,7 @@ def bbox_cell_ranges(minx: float, miny: float, maxx: float, maxy: float,
     """
     if level < 0 or level > MAX_LEVEL:
         raise ValueError(f"level {level} outside [0, {MAX_LEVEL}]")
-    coarse = 0
-    for lc in range(level, -1, -1):
-        gx0, gy0 = grid_coords(np.array([minx]), np.array([miny]), lc)
-        gx1, gy1 = grid_coords(np.array([maxx]), np.array([maxy]), lc)
-        if int(gx1[0] - gx0[0] + 1) * int(gy1[0] - gy0[0] + 1) <= max_ranges:
-            coarse = lc
-            break
+    coarse = _coarse_level(minx, miny, maxx, maxy, level, max_ranges)
     cover = cover_bbox(minx, miny, maxx, maxy, coarse)
     return _ranges_from_cover(cover, coarse, level)
 
@@ -136,26 +135,30 @@ def polygon_cell_ranges(xs: np.ndarray, ys: np.ndarray, level: int, *,
                         ring_offsets=None, max_ranges: int = 64) -> list:
     """:func:`bbox_cell_ranges` for an arbitrary polygon (holes /
     multipart via ``ring_offsets``): the coarse cover is
-    :func:`cover_polygon` (exact cell-square-vs-region overlap, so a
-    lake-shaped query skips files inside the lake's bbox but outside the
-    lake), widened to descendant intervals at ``level`` and coalesced.
+    :func:`cover_polygon` (the cells an edge meets or the region holds,
+    so a lake-shaped query skips files inside the lake's bbox but outside
+    the lake), widened to descendant intervals at ``level`` and coalesced.
     The coarse level is the finest one whose BBOX cover fits
     ``max_ranges`` — the polygon cover is a subset of that, so the bound
     holds. Coarse squares overhang the boundary: callers still refine
     exactly (PIP), pruning only promises no false negatives."""
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    minx, maxx = float(xs.min()), float(xs.max())
-    miny, maxy = float(ys.min()), float(ys.max())
-    coarse = 0
-    for lc in range(level, -1, -1):
-        gx0, gy0 = grid_coords(np.array([minx]), np.array([miny]), lc)
-        gx1, gy1 = grid_coords(np.array([maxx]), np.array([maxy]), lc)
-        if int(gx1[0] - gx0[0] + 1) * int(gy1[0] - gy0[0] + 1) <= max_ranges:
-            coarse = lc
-            break
+    coarse = _coarse_level(xs.min(), ys.min(), xs.max(), ys.max(), level,
+                           max_ranges)
     cover = cover_polygon(xs, ys, coarse, ring_offsets=ring_offsets)
     return _ranges_from_cover(cover, coarse, level)
+
+
+def _coarse_level(minx, miny, maxx, maxy, level: int, max_ranges: int) -> int:
+    """The finest level <= ``level`` whose bbox cover has at most
+    ``max_ranges`` cells; 0 when none has."""
+    for lc in range(level, -1, -1):
+        gx0, gy0 = grid_coords(minx, miny, lc)
+        gx1, gy1 = grid_coords(maxx, maxy, lc)
+        if int(gx1 - gx0 + 1) * int(gy1 - gy0 + 1) <= max_ranges:
+            return lc
+    return 0
 
 
 def _ranges_from_cover(cover: np.ndarray, coarse: int, level: int) -> list:
@@ -175,60 +178,88 @@ def _ranges_from_cover(cover: np.ndarray, coarse: int, level: int) -> list:
     return ranges
 
 
-def cover_polygon(xs: np.ndarray, ys: np.ndarray, level: int,
-                  ring_offsets=None) -> np.ndarray:
-    """Covering cells of a polygon (holes/multipart via ``ring_offsets``):
-    bbox cells filtered by an exact cell-square-vs-region overlap test
-    (region-vertex-in-cell, cell-center-in-region, or positive even-odd
-    clip area). E2 in SURVEY.md §2.2. A cell wholly inside a hole has zero
-    even-odd intersection area and is correctly excluded."""
-    from spandex_spark.geom import points_in_rings, rings_intersection_area
-
-    cands = cover_bbox(float(xs.min()), float(ys.min()),
-                       float(xs.max()), float(ys.max()), level)
-    if cands.shape[0] <= 4 and ring_offsets is None:
-        return cands
-    lon0, lat0, lon1, lat1 = cell_bounds(cands)
-    keep = np.zeros(cands.shape[0], dtype=bool)
-    # cheap accept: any ring vertex inside the cell square (a hole vertex
-    # borders the solid region, so this is safe for valid geometries)
-    for vx, vy in zip(xs, ys):
-        keep |= (lon0 <= vx) & (vx < lon1) & (lat0 <= vy) & (vy < lat1)
-    # cheap accept: cell center inside the even-odd region
-    ccx = (lon0 + lon1) / 2.0
-    ccy = (lat0 + lat1) / 2.0
-    keep |= points_in_rings(ccx, ccy, xs, ys, ring_offsets)
-    # exact test for the remainder (cells crossed only by an edge, or
-    # candidates inside a hole whose center-test said no)
-    for i in np.flatnonzero(~keep):
-        sq_x = np.array([lon0[i], lon1[i], lon1[i], lon0[i]])
-        sq_y = np.array([lat0[i], lat0[i], lat1[i], lat1[i]])
-        if rings_intersection_area(xs, ys, ring_offsets, sq_x, sq_y) > 0.0:
-            keep[i] = True
-    return cands[keep]
+def _spans(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(i, k)`` for every integer ``k`` in ``lo[i]..hi[i]``, flattened."""
+    cnt = hi - lo + 1
+    i = np.repeat(np.arange(lo.shape[0]), cnt)
+    k = np.arange(i.shape[0]) - np.repeat(np.cumsum(cnt) - cnt, cnt) + lo[i]
+    return i, k
 
 
 def cover_polygon_classified(xs: np.ndarray, ys: np.ndarray, level: int,
                              ring_offsets=None) -> tuple[np.ndarray, np.ndarray]:
-    """Covering cells + a FULL flag per cell: full ⟺ the cell square is
-    entirely inside the even-odd region (intersection area == cell area).
-    Points landing in a full cell are inside the polygon with no exact
-    refine — at fine levels most of a polygon's area is full cells, so the
-    exact refine only ever sees the boundary fringe. A cell touching a
-    hole is never full. (PostGIS gets the same effect from its box
-    pre-filter + interior ring checks.)"""
-    from spandex_spark.geom import rings_intersection_area
+    """Covering cells of a polygon (holes/multipart via ``ring_offsets``)
+    and a FULL flag per cell, in cover_bbox order, from one array pass
+    over the bbox cells:
 
-    cands = cover_polygon(xs, ys, level, ring_offsets)
-    lon0, lat0, lon1, lat1 = cell_bounds(cands)
-    full = np.zeros(cands.shape[0], dtype=bool)
-    for i in range(cands.shape[0]):
-        sq_x = np.array([lon0[i], lon1[i], lon1[i], lon0[i]])
-        sq_y = np.array([lat0[i], lat0[i], lat1[i], lat1[i]])
-        cell_area = (lon1[i] - lon0[i]) * (lat1[i] - lat0[i])
-        ix = rings_intersection_area(xs, ys, ring_offsets, sq_x, sq_y)
-        full[i] = ix >= cell_area * (1.0 - 1e-12)
-    return cands, full
+    * fringe: the cells any edge meets — every ring, closing and
+      horizontal edges included. Each edge is walked one row band at a
+      time in grid units; bands and column spans are widened by 16 ulps
+      of the grid width, more than the rounding of cell_of /
+      cell_of_expr, of the ray cast's crossing and of this walk together,
+      so a point near an edge never lands in a full cell;
+    * full: the other cells whose centre geom.points_in_rings puts
+      inside. No edge meets them, so every point in one is inside by the
+      same even-odd rule and needs no exact refine. A cell that an edge
+      only touches, or that holds a hole however small, is not full.
+
+    The cover is full ∪ fringe. Only even-odd PIP and edge positions
+    decide it; ring orientation does not."""
+    from spandex_spark.geom import points_in_rings
+
+    xs = np.asarray(xs, dtype=np.float64)
+    ys = np.asarray(ys, dtype=np.float64)
+    n = float(1 << level)
+    gx0, gy0 = (int(g) for g in grid_coords(xs.min(), ys.min(), level))
+    gx1, gy1 = (int(g) for g in grid_coords(xs.max(), ys.max(), level))
+    w = gx1 - gx0 + 1
+    margin = n * 2.0 ** -48
+    # vertices in grid units, same op order as grid_coords
+    u = (xs + 180.0) / 360.0 * n
+    v = (ys + 90.0) / 180.0 * n
+    off = (np.asarray(ring_offsets, dtype=np.int64)
+           if ring_offsets is not None and len(ring_offsets) > 2
+           else np.array([0, xs.shape[0]], dtype=np.int64))
+    nxt = np.arange(1, xs.shape[0] + 1)
+    nxt[off[1:] - 1] = off[:-1]
+    u1, v1, u2, v2 = u, v, u[nxt], v[nxt]
+
+    # (edge, row) for every widened row band an edge spans; the grid's
+    # first and last rows also hold what cell_of clamps into them
+    vlo, vhi = np.minimum(v1, v2), np.maximum(v1, v2)
+    e, r = _spans(np.clip(np.floor(vlo - margin), gy0, gy1).astype(np.int64),
+                  np.clip(np.floor(vhi + margin), gy0, gy1).astype(np.int64))
+    b0 = np.maximum(vlo[e], np.where(r == 0, -np.inf, r - margin))
+    b1 = np.minimum(vhi[e], np.where(r == n - 1, np.inf, r + 1 + margin))
+    # the edge's u extent inside the band (a horizontal edge: all of it)
+    dv = v2[e] - v1[e]
+    flat = dv == 0.0
+    dv = np.where(flat, 1.0, dv)
+    ta = np.where(flat, 0.0, np.clip((b0 - v1[e]) / dv, 0.0, 1.0))
+    tb = np.where(flat, 1.0, np.clip((b1 - v1[e]) / dv, 0.0, 1.0))
+    ua = u1[e] + ta * (u2[e] - u1[e])
+    ub = u1[e] + tb * (u2[e] - u1[e])
+    j, c = _spans(
+        np.clip(np.floor(np.minimum(ua, ub) - margin), gx0, gx1).astype(np.int64),
+        np.clip(np.floor(np.maximum(ua, ub) + margin), gx0, gx1).astype(np.int64))
+    fringe = np.zeros((gy1 - gy0 + 1) * w, dtype=bool)
+    fringe[(r[j] - gy0) * w + (c - gx0)] = True
+
+    full = np.zeros_like(fringe)
+    inner = np.flatnonzero(~fringe)
+    full[inner] = points_in_rings((gx0 + inner % w + 0.5) / n * 360.0 - 180.0,
+                                  (gy0 + inner // w + 0.5) / n * 180.0 - 90.0,
+                                  xs, ys, ring_offsets)
+    keep = np.flatnonzero(fringe | full)
+    return xy_to_cell(gx0 + keep % w, gy0 + keep // w, level), full[keep]
+
+
+def cover_polygon(xs: np.ndarray, ys: np.ndarray, level: int,
+                  ring_offsets=None) -> np.ndarray:
+    """Covering cells of a polygon: the cells of
+    :func:`cover_polygon_classified`. E2 in SURVEY.md §2.2. A cell wholly
+    inside a hole is excluded."""
+    return cover_polygon_classified(xs, ys, level, ring_offsets)[0]
 
 
 def cover_linestring(xs: np.ndarray, ys: np.ndarray, level: int,

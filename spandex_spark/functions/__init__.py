@@ -7,10 +7,7 @@ pyspark.sql.functions built-ins stays JVM-side.
 
 from spandex_spark.functions.spatial import (  # noqa: F401
     cell_of_udf,
-    cell_parent_udf,
     cover_cells_udf,
-    haversine_udf,
     webmercator_udf,
     geom_is_valid_udf,
-    centroid_udf,
 )

@@ -24,15 +24,6 @@ def cell_of_udf(lon, lat, level: int):
     return _cell_of(lon, lat, F.lit(level))
 
 
-@pandas_udf(T.LongType())
-def _cell_parent(cell: pd.Series, level: pd.Series) -> pd.Series:
-    return pd.Series(_cells.parent(cell.to_numpy(np.int64), int(level.iloc[0])))
-
-
-def cell_parent_udf(cell, level: int):
-    return _cell_parent(cell, F.lit(level))
-
-
 def _off(o):
     """ring_offsets cell value → numpy offsets or None (single ring)."""
     if o is None:
@@ -106,19 +97,6 @@ def cover_cells_classified_udf(geom_col, level: int):
     edges for the exact refine. One Python pass builds both."""
     return _cover_cells_classified(geom_col["xs"], geom_col["ys"],
                                    geom_col["ring_offsets"], F.lit(level))
-
-
-@pandas_udf(T.DoubleType())
-def _haversine(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series,
-               lat2: pd.Series) -> pd.Series:
-    return pd.Series(_geom.haversine_m(lon1.to_numpy(np.float64),
-                                       lat1.to_numpy(np.float64),
-                                       lon2.to_numpy(np.float64),
-                                       lat2.to_numpy(np.float64)))
-
-
-def haversine_udf(lon1, lat1, lon2, lat2):
-    return _haversine(lon1, lat1, lon2, lat2)
 
 
 _MERC_TYPE = T.StructType([T.StructField("x", T.DoubleType()),
@@ -257,27 +235,6 @@ def geom_is_valid_udf(geom_col):
                           geom_col["ring_offsets"])
 
 
-_PT_TYPE = T.StructType([T.StructField("x", T.DoubleType()),
-                         T.StructField("y", T.DoubleType())])
-
-
-@pandas_udf(_PT_TYPE)
-def _centroid(xs: pd.Series, ys: pd.Series, offs: pd.Series) -> pd.DataFrame:
-    cx = np.empty(len(xs))
-    cy = np.empty(len(xs))
-    for i, (x, y) in enumerate(zip(xs, ys)):
-        cx[i], cy[i] = _geom.rings_centroid(np.asarray(x, np.float64),
-                                            np.asarray(y, np.float64),
-                                            _off(offs.iloc[i]))
-    return pd.DataFrame({"x": cx, "y": cy})
-
-
-def centroid_udf(geom_col):
-    """ST_Centroid analog (used by spandex/spatialtoolz.py::tag for
-    point-in-poly of polygon targets); signed-area weighted across rings."""
-    return _centroid(geom_col["xs"], geom_col["ys"], geom_col["ring_offsets"])
-
-
 @pandas_udf(T.DoubleType())
 def _rings_area(xs: pd.Series, ys: pd.Series, offs: pd.Series) -> pd.Series:
     out = np.empty(len(xs))
@@ -320,9 +277,9 @@ def _rings_centroid(xs: pd.Series, ys: pd.Series,
 
 def geom_centroid_udf(geom_col):
     """ST_Centroid analog (signed-area-weighted across rings — holes pull
-    away, disjoint multipolygon parts weight by area). The reference uses
-    ST_Centroid for polygon-target tagging (spandex/spatialtoolz.py::tag);
-    this exposes the same kernel as a column function. NULL -> NaN pair."""
+    away, disjoint multipolygon parts weight by area). As in the
+    reference's polygon-target tagging (spandex/spatialtoolz.py::tag),
+    operators.tag.tag tags each target by its centroid. NULL -> NaN pair."""
     return _rings_centroid(geom_col["xs"], geom_col["ys"],
                            geom_col["ring_offsets"])
 

@@ -12,23 +12,22 @@ equi-join key (a point in cell C can only hit pieces with cell C — no
 fringe ambiguity), and pieces bound kernel cost per row.
 
 Per piece geometry:
-* FULL interior cells (cell square entirely inside the region,
-  `cells.cover_polygon_classified`) emit the cell square itself — no
-  clipping runs; for fine levels this is most pieces.
-* Boundary cells clip via the exact boolean kernel
+* FULL interior cells (no edge meets the cell square and its centre is
+  inside, `cells.cover_polygon_classified`) emit the cell square itself —
+  no clipping runs; for fine levels this is most pieces.
+* Fringe cells clip via the exact boolean kernel
   (`geom.boolean_rings` intersection with the cell rect), holes and
-  multiparts handled by the arrangement; empty intersections drop.
+  multiparts handled by the arrangement; empty intersections drop, so a
+  cell that an edge only touches emits no piece.
 
 Invariants (pytested): piece areas sum to the polygon area (arrangement
 quantization ~1e-9); pieces are disjoint (cell grid is a partition);
 tagging points against pieces on the piece cell key equals tagging
 against the originals.
 
-Input follows the repo geometry convention: outer rings CCW, holes CW
-(the signed-area kernels `rings_intersection_area` /
-`cover_polygon_classified` depend on it; even-odd PIP alone does not,
-so a CCW hole fails HERE first — run `make_valid` on foreign data,
-its output is correctly oriented).
+Ring orientation does not matter here: the cover classification uses
+only even-odd PIP and edge positions, and the clip's arrangement keeps
+the faces that even-odd PIP puts inside.
 
 Scale shape: one Arrow pass over the polygon table, NO shuffle — the
 fan-out happens inside the batch. Output size is ~4^level pieces per

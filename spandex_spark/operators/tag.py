@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from spandex_spark.functions.cells_sql import cell_of_expr
 from spandex_spark.functions.spatial import (
-    cover_cells_classified_udf, centroid_udf)
+    cover_cells_classified_udf, geom_centroid_udf)
 
 
 def ray_cast(px: Column, py: Column, edges: Column) -> Column:
@@ -148,8 +148,8 @@ def tag(targets: DataFrame, polygons: DataFrame, *,
     """Polygon-target variant of spandex/spatialtoolz.py::tag: tags each
     target polygon by the source polygon containing its centroid
     (ST_Centroid + ST_Contains)."""
-    cent = targets.withColumn("_c", centroid_udf(F.col("geom")))
-    cent = cent.withColumn("_clon", F.col("_c.x")).withColumn("_clat", F.col("_c.y")).drop("_c")
+    cent = targets.withColumn("_c", geom_centroid_udf(F.col("geom")))
+    cent = cent.withColumn("_clon", F.col("_c.cx")).withColumn("_clat", F.col("_c.cy")).drop("_c")
     out = tag_points(cent, polygons, poly_id_col=poly_id_col,
                      point_id_col=target_id_col, level=level,
                      lon_col="_clon", lat_col="_clat",

@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_half_heap() -> str:
+    """Half the host's physical memory in whole GiB (at least 1g): in
+    local mode the driver JVM is the only JVM, and the Python workers and
+    the OS need the other half."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "spandex_spark",
     master: str | None = None,
@@ -69,7 +77,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("SPANDEX_ARROW_BATCH", "20000"))
-        .config("spark.driver.memory", os.environ.get("SPANDEX_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPANDEX_DRIVER_MEM", _host_half_heap()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # small-file sandbox: default 128MB gives a 600k-row table ONE input

@@ -373,17 +373,96 @@ class TestRingCover:
         assert band_cell in cov
 
     def test_full_classification_respects_hole(self):
+        """Seeded property over holed, multipart, shared-edge, grid-aligned
+        and sliver-hole polygons at levels 6-12: no edge meets the closed
+        square of a full cell and its centre is inside; every vertex and
+        every sampled region point (edge points included) falls in a cover
+        cell; no point outside the region falls in a full cell."""
         from spandex_spark import cells as C
-        xs, ys, off = _donut(-8, -8, 8, 8, -4, -4, 4, 4)
-        cells_arr, full = C.cover_polygon_classified(xs, ys, 6, off)
-        import numpy as _np
-        lon0, lat0, lon1, lat1 = C.cell_bounds(cells_arr)
-        for i in range(cells_arr.shape[0]):
-            if full[i]:
-                # every corner of a full cell must be in the region
-                cx = _np.array([lon0[i], lon1[i] - 1e-9, lon0[i], lon1[i] - 1e-9])
-                cy = _np.array([lat0[i], lat0[i], lat1[i] - 1e-9, lat1[i] - 1e-9])
-                assert geom.points_in_rings(cx, cy, xs, ys, off).all()
+        rng = np.random.default_rng(6)
+        for level in range(6, 13):
+            cw, ch = 360.0 / (1 << level), 180.0 / (1 << level)
+            for xs, ys, off in _cover_cases(rng, cw, ch):
+                cells_arr, full = C.cover_polygon_classified(xs, ys, level, off)
+                cover = set(cells_arr.tolist())
+                lon0, lat0, lon1, lat1 = C.cell_bounds(cells_arr[full])
+                assert geom.points_in_rings((lon0 + lon1) / 2, (lat0 + lat1) / 2,
+                                            xs, ys, off).all()
+                for ax, ay, bx, by in _edges(xs, ys, off):
+                    assert not _meets_closed(ax, ay, bx, by,
+                                             lon0, lat0, lon1, lat1).any()
+                assert set(C.cell_of(xs, ys, level).tolist()) <= cover
+                px, py = _samples(rng, xs, ys, off)
+                inside = geom.points_in_rings(px, py, xs, ys, off)
+                pc = C.cell_of(px, py, level)
+                assert set(pc[inside].tolist()) <= cover
+                assert not set(pc[~inside].tolist()) & set(
+                    cells_arr[full].tolist())
+
+
+def _cover_cases(rng, cw, ch):
+    """(xs, ys, ring_offsets) polygons for the cover property test."""
+    cases = [_donut(-8, -8, 8, 8, -4, -4, 4, 4)]
+    # holed star plus a second part
+    k = 7
+    ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, 2 * k))
+    rad = np.where(np.arange(2 * k) % 2 == 0, rng.uniform(2.0, 3.0, 2 * k),
+                   rng.uniform(1.0, 2.0, 2 * k))
+    ox, oy = 1.3 + rad * np.cos(ang), -0.7 + rad * np.sin(ang)
+    hx, hy = 1.3 + 0.3 * (ox - 1.3), -0.7 + 0.3 * (oy + 0.7)
+    cases.append((np.concatenate([ox, hx[::-1], ox + 7.0]),
+                  np.concatenate([oy, hy[::-1], oy - 5.0]),
+                  np.array([0, 2 * k, 4 * k, 6 * k])))
+    # two parts sharing an edge, and a triangle fan sharing its spokes
+    cases.append((np.array([0.0, 2.0, 2.0, 0.0, 2.0, 5.0, 5.0, 2.0]),
+                  np.array([0.0, 0.0, 3.0, 3.0, 0.5, 0.5, 2.5, 2.5]),
+                  np.array([0, 4, 8])))
+    cases.append((np.array([0.0, 3.0, 2.0, 0.0, 2.0, -1.0]),
+                  np.array([0.0, 1.0, 3.0, 0.0, 3.0, 2.0]),
+                  np.array([0, 3, 6])))
+    # grid-aligned: every edge on a cell side, a hole of exactly one cell
+    gx, gy = np.floor(3.3 / cw) * cw, np.floor(-2.1 / ch) * ch
+    cases.append(_donut(gx, gy, gx + 5 * cw, gy + 4 * ch,
+                        gx + 2 * cw, gy + ch, gx + 3 * cw, gy + 2 * ch))
+    # a 1e-7 deg hole off the centre of one cell
+    sx, sy = gx + 0.25 * cw, gy + 2.25 * ch
+    cases.append(_donut(gx, gy, gx + 5 * cw, gy + 4 * ch,
+                        sx, sy, sx + 1e-7, sy + 1e-7))
+    return cases
+
+
+def _edges(xs, ys, off):
+    """(ax, ay, bx, by) of every ring edge, closing edges included."""
+    for rx, ry in geom.rings_of(xs, ys, off):
+        for i in range(rx.shape[0]):
+            j = (i + 1) % rx.shape[0]
+            yield rx[i], ry[i], rx[j], ry[j]
+
+
+def _meets_closed(ax, ay, bx, by, lon0, lat0, lon1, lat1):
+    """Does segment a-b meet each closed square? (Liang-Barsky clip.)"""
+    t0 = np.zeros(lon0.shape[0])
+    t1 = np.ones(lon0.shape[0])
+    for p, q0, q1 in ((bx - ax, lon0 - ax, lon1 - ax),
+                      (by - ay, lat0 - ay, lat1 - ay)):
+        if p == 0:
+            t0 = np.where((q0 > 0) | (q1 < 0), 2.0, t0)
+        else:
+            t0 = np.maximum(t0, np.minimum(q0 / p, q1 / p))
+            t1 = np.minimum(t1, np.maximum(q0 / p, q1 / p))
+    return t0 <= t1
+
+
+def _samples(rng, xs, ys, off):
+    """Uniform points over the bbox plus points on and beside every edge."""
+    px = [rng.uniform(xs.min(), xs.max(), 3000)]
+    py = [rng.uniform(ys.min(), ys.max(), 3000)]
+    for ax, ay, bx, by in _edges(xs, ys, off):
+        t = rng.uniform(0.0, 1.0, 40)
+        ex, ey = ax + t * (bx - ax), ay + t * (by - ay)
+        px += [ex, np.nextafter(ex, np.inf), np.nextafter(ex, -np.inf)]
+        py += [ey, np.nextafter(ey, -np.inf), np.nextafter(ey, np.inf)]
+    return np.concatenate(px), np.concatenate(py)
 
 
 class TestUTM:

@@ -10,6 +10,7 @@ import re
 import numpy as np
 from pyspark.sql import functions as F
 
+from spandex_spark import cells
 from spandex_spark.geom import points_in_rings
 from spandex_spark.operators import tag_points
 from spandex_spark.operators.tag import PolygonIndex
@@ -153,6 +154,17 @@ class TestRectFastPath:
             part = _star(rng, cx + 3.0, cy - 3.0, pid % 2)
             rows.append(_ring_poly(
                 [outer, (hole[0][::-1], hole[1][::-1]), part], pid))
+        # a 1e-7 deg square hole off the centre of one level-9 cell: the
+        # cell is not full, so the point in the hole goes to the ray cast
+        lon0, lat0, lon1, lat1 = (float(b[0]) for b in cells.cell_bounds(
+            cells.cell_of(np.array([21.0]), np.array([21.0]), 9)))
+        hx, hy = (3 * lon0 + lon1) / 4.0, (3 * lat0 + lat1) / 4.0
+        d = 0.5e-7
+        square = (np.array([20.0, 22.0, 22.0, 20.0]),
+                  np.array([20.0, 20.0, 22.0, 22.0]))
+        sliver = (np.array([hx - d, hx - d, hx + d, hx + d]),
+                  np.array([hy - d, hy + d, hy + d, hy - d]))
+        rows.append(_ring_poly([square, sliver], 30))
         polys = spark.createDataFrame(rows, _POLY_SCHEMA)
 
         qx, qy = [], []
@@ -164,6 +176,8 @@ class TestRectFastPath:
                 qy += [ry, (ry + np.roll(ry, -1)) / 2.0]
         qx.append(rng.uniform(-4.0, 6.0, 2000))
         qy.append(rng.uniform(-6.0, 4.0, 2000))
+        qx.append(np.array([hx]))
+        qy.append(np.array([hy]))
         qx, qy = np.concatenate(qx), np.concatenate(qy)
         pts = spark.createDataFrame(
             [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(qx, qy))],
