@@ -59,8 +59,8 @@ def _pts_from_lineitem(spark, sf_dir):
 
 def q_pip_tag_knn(spark, sf_dir):
     """Headline: PIP tag + nearest-feature over the point stream, FUSED —
-    one scan, zero shuffles on the points (disjoint zone grid skips the
-    winner-resolve; the POI layer rides along as a broadcast numpy kernel)."""
+    one scan, zero shuffles on the points (the zone is picked inside each
+    point row; the POI layer rides along as a broadcast numpy kernel)."""
     from pyspark.sql import functions as F
     from spandex_spark.operators import tag_points
     pts = _pts_from_lineitem(spark, sf_dir)

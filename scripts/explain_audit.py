@@ -33,6 +33,11 @@ CHECKS = {
         (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",
          "ZERO Python on the point stream — full cells and the ray cast "
          "are one JVM refine; the Python cover ran once, at index build"),
+        (r"^(?![\s\S]*customer\.parquet[\s\S]*customer\.parquet)",
+         "the point source is scanned once — the min-id winner is picked "
+         "inside each point row, with no join back"),
+        (r"^(?![\s\S]*Exchange hashpartitioning\(c_custkey#)",
+         "no shuffle of point rows by point id"),
     ],
     "knn broadcast (k=1 agg path)": [
         ("SortAggregate|HashAggregate",

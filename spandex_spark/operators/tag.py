@@ -13,12 +13,15 @@ Scale notes (100 TB):
   evaluate it twice (join-key null filter + projection) at codegen speed;
 - the polygon side explodes into covering cells, each flagged FULL when
   it lies entirely inside its polygon; fringe cells carry the polygon's
-  ray-cast edges as an array column. That cell table is broadcast when
-  small (zone layers almost always are) and shuffled on ``cell`` when
-  not (``broadcast_polys=False``) — the only difference between routes;
-- the refine is one JVM expression on either route, ``_full OR
-  ray_cast(...)``, so the point stream never crosses into Python,
-  whatever the polygon shapes.
+  ray-cast edges as an array column. Grouped by cell into id-sorted
+  candidate lists, that table is broadcast when small (zone layers
+  almost always are) and shuffled on the cell key when not
+  (``broadcast_polys=False``) — the only difference between routes;
+- each point row left-joins its cell's candidate list and keeps the
+  first candidate that passes ``_full OR ray_cast(...)``: one JVM
+  expression, so the point stream never crosses into Python, whatever
+  the polygon shapes, and the min-id winner is resolved inside the row
+  (no shuffle of point rows on the broadcast route, no join back).
 """
 
 from __future__ import annotations
@@ -84,6 +87,23 @@ class PolygonIndex:
         self.cells_df.count()
 
 
+def _candidates(cells_df: DataFrame,
+                poly_attr_cols: tuple[str, ...]) -> DataFrame:
+    """One row per cell: ``_cell`` and ``_cands``, the cell's candidate
+    polygons as structs (``_pid``, ``_full``, ``_edges``, ``_attr_*``)
+    sorted by ``_pid``. Polygons with a NULL id are left out: they never
+    win, as ``min`` over the ids ignored them."""
+    def by_pid(a, b):
+        return (F.when(a["_pid"] < b["_pid"], -1)
+                .when(a["_pid"] > b["_pid"], 1).otherwise(0))
+
+    cand = F.struct("_pid", "_full", "_edges",
+                    *[f"_attr_{c}" for c in poly_attr_cols])
+    return (cells_df.filter(F.col("_pid").isNotNull())
+            .groupBy(F.col("cell").alias("_cell"))
+            .agg(F.array_sort(F.collect_list(cand), by_pid).alias("_cands")))
+
+
 def tag_points(points: DataFrame, polygons: DataFrame, *,
                poly_id_col: str, point_id_col: str, level: int = 9,
                lon_col: str = "lon", lat_col: str = "lat",
@@ -95,22 +115,25 @@ def tag_points(points: DataFrame, polygons: DataFrame, *,
 
     Returns all point columns + ``poly_id_col`` (+ requested polygon attrs).
     For disjoint polygon layers each point matches at most one polygon; for
-    overlapping layers the smallest ``poly_id_col`` wins (deterministic).
+    overlapping layers the smallest ``poly_id_col`` wins (deterministic),
+    attributes included; a polygon with a NULL id never wins. A point with
+    a NULL lon or lat tags NULL.
 
-    Each point joins the covering cells of its own cell. A candidate is a
-    hit when its cell is FULL, or else when the ray cast over the
+    Each point row left-joins the candidate list of its own cell (the
+    cell's covering polygons, sorted by id) and keeps the first candidate
+    that holds it: its cell is FULL, or else the ray cast over the
     polygon's edges (``ray_cast``, the exact even-odd rule of
     geom.points_in_rings: holes and multipart included, left/bottom
-    boundaries inside) says so. ``broadcast_polys=False`` shuffles the
-    cell table instead of broadcasting it; an ``index`` is always
-    broadcast and replaces ``polygons``, ``poly_id_col``, ``level`` and
-    ``poly_attr_cols``.
+    boundaries inside) says so. So the winner is resolved inside the row:
+    no grouping by point and no join back, and the point side is read
+    once. ``broadcast_polys=False`` shuffles the candidate table instead
+    of broadcasting it; an ``index`` is always broadcast and replaces
+    ``polygons``, ``poly_id_col``, ``level`` and ``poly_attr_cols``.
+    ``point_id_col`` is accepted for callers that name it; the route does
+    not need a point id.
 
-    ``assume_disjoint=True`` (zone/parcel layers — polygons don't overlap):
-    a point sits in exactly one cell and a polygon covers that cell once,
-    so each point produces at most one refined hit — the groupBy resolver
-    and the join-back are skipped entirely (two shuffles saved; unmatched
-    points are dropped, i.e. inner semantics).
+    ``assume_disjoint=True`` drops the points no polygon holds (inner
+    semantics, e.g. a streaming append sink that wants tagged rows only).
     """
     if index is not None:
         level = index.level
@@ -119,27 +142,23 @@ def tag_points(points: DataFrame, polygons: DataFrame, *,
         cells_df = index.cells_df
     else:
         cells_df = _cell_table(polygons, poly_id_col, poly_attr_cols, level)
+    cands = _candidates(cells_df, poly_attr_cols)
     if index is not None or broadcast_polys:
-        cells_df = F.broadcast(cells_df)
+        cands = F.broadcast(cands)
 
-    pts = points.withColumn(
-        "cell", cell_of_expr(f"`{lon_col}`", f"`{lat_col}`", level))
-    inside = F.col("_full") | ray_cast(F.col(lon_col), F.col(lat_col),
-                                       F.col("_edges"))
-    hits = pts.join(cells_df, "cell", "inner").filter(inside)
-
+    lon, lat = F.col(lon_col), F.col(lat_col)
+    win = F.get(F.filter("_cands", lambda c: c["_full"]
+                         | ray_cast(lon, lat, c["_edges"])), 0)
+    out = (points.withColumn(
+               "_cell", cell_of_expr(f"`{lon_col}`", f"`{lat_col}`", level))
+           .join(cands, "_cell", "left")
+           .withColumn("_win", win))
     if assume_disjoint:
-        return hits.select(
-            *[F.col(c) for c in points.columns],
-            F.col("_pid").alias(poly_id_col),
-            *[F.col(f"_attr_{c}").alias(c) for c in poly_attr_cols])
-
-    # winner per point: min poly id (unique anyway for disjoint layers).
-    agg_cols = [F.min("_pid").alias(poly_id_col)] + [
-        F.min_by(f"_attr_{c}", "_pid").alias(c) for c in poly_attr_cols]
-    winners = hits.groupBy(point_id_col).agg(*agg_cols)
-
-    return points.join(winners, point_id_col, "left")
+        out = out.filter(F.col("_win").isNotNull())
+    return out.select(
+        *[F.col(c) for c in points.columns],
+        F.col("_win._pid").alias(poly_id_col),
+        *[F.col(f"_win._attr_{c}").alias(c) for c in poly_attr_cols])
 
 
 def tag(targets: DataFrame, polygons: DataFrame, *,

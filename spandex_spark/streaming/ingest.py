@@ -70,10 +70,10 @@ def stream_tag_pages(spark: SparkSession, input_dir: str, output_dir: str,
              .option("maxFilesPerTrigger", 8)
              .parquet(input_dir))
     pts = geotag(pages, gazetteer).filter(F.col("lon").isNotNull())
-    # assume_disjoint: zone layers don't overlap, so the min-id resolver
-    # groupBy is skipped — the plan is join+filter only, which is what
-    # makes it legal in streaming append mode (inner semantics: only
-    # points inside some zone are emitted)
+    # assume_disjoint: emit only the points inside some zone (inner
+    # semantics). The tag itself is a stateless broadcast join plus a
+    # per-row winner pick, so it is legal in streaming append mode either
+    # way
     tagged = tag_points(pts, zones, poly_id_col="zone_id",
                         point_id_col="url", level=level,
                         poly_attr_cols=("zclass",), assume_disjoint=True)

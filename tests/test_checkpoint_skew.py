@@ -6,6 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from spandex_spark import checkpoint
 from spandex_spark.tables import IcebergishTable
 from spandex_spark.checkpoint import CheckpointedStage
 from spandex_spark.operators.skew import hot_cells, salted_cell_join
@@ -109,6 +110,92 @@ class TestManifestAtomicity:
         per_bucket = {r.bucket: (r.rows_in, r.rows_out) for r in m}
         assert len(per_bucket) == 5
         assert all(ri == 60 and ro == 30 for ri, ro in per_bucket.values())
+
+
+def _written_counts(spark, stage) -> dict:
+    """Per-bucket rows of the committed files, counted apart from the
+    stage's own lineage."""
+    paths = sorted({rec["path"] for rec in stage._manifest_records()})
+    return {int(r["_bucket"]): int(r["count"]) for r in
+            spark.read.parquet(*paths).groupBy("_bucket").count().collect()}
+
+
+class TestCrashConsistency:
+    """A crash at either side of the manifest fsync: resume heals the data
+    and the lineage, and the lineage equals independent counts."""
+
+    @staticmethod
+    def _fn(df):
+        return df.withColumn("out", F.col("id") + 1)
+
+    def test_crash_before_manifest_line_recomputes_batch(self, spark, tmp_path,
+                                                          monkeypatch):
+        root = str(tmp_path / "pre")
+        src = spark.range(200).select(F.col("id"))
+
+        def no_append(path, mode="r", *a, **kw):
+            if "a" in mode:
+                raise RuntimeError("crash before the manifest line")
+            return open(path, mode, *a, **kw)
+
+        st = CheckpointedStage(root, run_id="r1", stage="s", n_buckets=4)
+        monkeypatch.setattr(checkpoint, "open", no_append, raising=False)
+        with pytest.raises(RuntimeError, match="before the manifest"):
+            st.run(spark, src, F.col("id"), self._fn, buckets_per_batch=2)
+        monkeypatch.undo()
+        # the batch's Parquet landed, but nothing committed it
+        assert os.listdir(os.path.join(st.root, "batch-00000"))
+        resumed = CheckpointedStage(root, run_id="r2", stage="s", n_buckets=4)
+        assert resumed.pending_buckets() == [0, 1, 2, 3]
+        out = resumed.run(spark, src, F.col("id"), self._fn, buckets_per_batch=2)
+        assert sorted(r.id for r in out.collect()) == list(range(200))
+        m = resumed.read_metrics(spark).collect()
+        # no lineage row for the lost attempt
+        assert sorted((r.bucket, r.run_id) for r in m) == [
+            (b, "r2") for b in range(4)]
+        assert {r.bucket: r.rows_out for r in m} == _written_counts(spark, resumed)
+
+    def test_crash_after_manifest_publishes_lineage_once(self, spark, tmp_path,
+                                                         monkeypatch):
+        root = str(tmp_path / "post")
+        src = spark.range(200).select(F.col("id"))
+
+        def crash(*a, **kw):
+            raise RuntimeError("crash after the manifest fsync")
+
+        st = CheckpointedStage(root, run_id="r1", stage="s", n_buckets=4)
+        monkeypatch.setattr(IcebergishTable, "_publish", crash)
+        with pytest.raises(RuntimeError, match="after the manifest"):
+            st.run(spark, src, F.col("id"), self._fn, buckets_per_batch=2)
+        monkeypatch.undo()
+        assert st.completed_buckets() == {0, 1}
+        resumed = CheckpointedStage(root, run_id="r2", stage="s", n_buckets=4)
+        out = resumed.run(spark, src, F.col("id"), self._fn, buckets_per_batch=2)
+        # a run with nothing pending publishes nothing twice
+        CheckpointedStage(root, run_id="r3", stage="s", n_buckets=4).run(
+            spark, src, F.col("id"), self._fn, buckets_per_batch=2)
+        m = resumed.read_metrics(spark).collect()
+        assert sorted((r.bucket, r.run_id) for r in m) == [
+            (0, "r1"), (1, "r1"), (2, "r2"), (3, "r2")]
+        assert sum(r.rows_out for r in m) == out.count() == 200
+        assert {r.bucket: r.rows_out for r in m} == _written_counts(spark, resumed)
+
+    def test_fn_with_no_rows_or_ignoring_input_counts_exactly(self, spark,
+                                                              tmp_path):
+        src = spark.range(120).select(F.col("id"))
+        cases = {"empty": (lambda df: df.filter(F.lit(False)), 0),
+                 "ignores_input": (lambda df: spark.range(1000, 1040)
+                                   .select(F.col("id")), 40)}
+        for name, (fn, n_out) in cases.items():
+            st = CheckpointedStage(str(tmp_path / name), run_id="r1", stage="s",
+                                   n_buckets=4)
+            out = st.run(spark, src, F.col("id"), fn, buckets_per_batch=4)
+            assert out.count() == n_out
+            m = {r.bucket: (r.rows_in, r.rows_out)
+                 for r in st.read_metrics(spark).collect()}
+            written = _written_counts(spark, st)
+            assert m == {b: (30, written.get(b, 0)) for b in range(4)}, name
+            assert sum(ro for _, ro in m.values()) == n_out
 
 
 class TestSkewSalting:

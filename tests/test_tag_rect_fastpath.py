@@ -46,7 +46,9 @@ def _oracle(pts, polys, poly_id_col):
     px = np.array([r["lon"] for r in rows], np.float64)
     py = np.array([r["lat"] for r in rows], np.float64)
     want = dict.fromkeys(ids)
-    for poly in sorted(polys.collect(), key=lambda r: r[poly_id_col]):
+    # a polygon with a NULL id never wins, whatever it overlaps
+    for poly in sorted((r for r in polys.collect() if r[poly_id_col] is not None),
+                       key=lambda r: r[poly_id_col]):
         g = poly["geom"]
         inside = points_in_rings(px, py, np.array(g["xs"], np.float64),
                                  np.array(g["ys"], np.float64),
@@ -165,6 +167,11 @@ class TestRectFastPath:
         sliver = (np.array([hx - d, hx - d, hx + d, hx + d]),
                   np.array([hy - d, hy + d, hy + d, hy - d]))
         rows.append(_ring_poly([square, sliver], 30))
+        # a NULL-id polygon over the stars and past them (stars reach
+        # y <= 3.6, their parts x <= 6.6 but y <= 0.6): inside it, the id'd
+        # polygon under the point wins, or else the point tags NULL
+        rows.append(_ring_poly([(np.array([-1.0, 5.0, 5.0, -1.0]),
+                                 np.array([-1.0, -1.0, 3.0, 3.0]))], None))
         polys = spark.createDataFrame(rows, _POLY_SCHEMA)
 
         qx, qy = [], []
@@ -179,12 +186,19 @@ class TestRectFastPath:
         qx.append(np.array([hx]))
         qy.append(np.array([hy]))
         qx, qy = np.concatenate(qx), np.concatenate(qy)
+        # points with a NULL lon or lat tag NULL
+        no_coord = [(None, 0.5), (0.5, None), (None, None)]
         pts = spark.createDataFrame(
-            [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(qx, qy))],
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(qx, qy))]
+            + [(len(qx) + i, x, y) for i, (x, y) in enumerate(no_coord)],
             "pt_id long, lon double, lat double")
         want = _assert_all_routes(pts, polys, "pid", 9)
         hit = sum(v is not None for v in want.values())
         assert 0 < hit < len(want)
+        assert [want[len(qx) + i] for i in range(3)] == [None] * 3
+        inside_null = [want[i] for i in np.flatnonzero(
+            (qx > -1.0) & (qx < 5.0) & (qy > -1.0) & (qy < 3.0))]
+        assert None in inside_null and set(inside_null) - {None}
 
     def test_index_tag_plan_runs_no_python(self, spark):
         dz = donut_zones_df(spark)
@@ -199,3 +213,13 @@ class TestRectFastPath:
         assert "InMemoryTableScan" in plan
         assert re.search(r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|"
                          r"MapInPandas))", _executed(plan))
+        # the winner is resolved inside each point row: the point source is
+        # read once and point rows are never shuffled by their id
+        bcast = tag_points(pts, dz, poly_id_col="dz_id",
+                           point_id_col="pt_id", level=7)
+        bcast.collect()
+        for df in (out, bcast):
+            final = df._jdf.queryExecution().executedPlan().toString().split(
+                "== Initial Plan ==")[0]
+            assert len(re.findall(r"Range \(0, 200,", final)) == 1, final
+            assert not re.search(r"Exchange hashpartitioning\(pt_id#", final), final
