@@ -26,6 +26,16 @@ _PAIR_TABLE_CHECKS = [
      "distinct query cell"),
 ]
 
+
+def _floors_at_most(n: int):
+    """The pair join (cells_sql.bbox_pairs) floors each grid coordinate
+    once: four per side for the bbox covers, two for the reference
+    point — ``n`` is that count times the plan's copies of the join."""
+    return (rf"^(?!(?:[\s\S]*?FLOOR\(){{{n + 1}}})",
+            f"at most {n} FLOOR( calls — each grid coordinate of the "
+            f"bbox pair join is floored once")
+
+
 CHECKS = {
     "pip_tag (two-phase cell join)": [
         ("BroadcastHashJoin", "polygon side broadcast"),
@@ -48,7 +58,8 @@ CHECKS = {
     ],
     "overlay": [("BroadcastHashJoin", "overlay side broadcast"),
                 (r"least\(", "rect×rect fast path is pure JVM arithmetic "
-                             "(LEAST/GREATEST inside codegen, no Python)")],
+                             "(LEAST/GREATEST inside codegen, no Python)"),
+                _floors_at_most(20)],
     "knn cells (query-cell pair table)": [
         *_PAIR_TABLE_CHECKS,
         ("HashAggregate|SortAggregate", "k=1 min_by map-side combine"),
@@ -132,6 +143,7 @@ CHECKS = {
          "old pandas-UDF cover hid the partitioning and forced a shuffle). "
          "Parquet-sourced targets get the bounded "
          "Exchange hashpartitioning(_tid) back — verified both ways"),
+        _floors_at_most(20),
     ],
     "buffer_polygons (concave arrangement path)": [
         ("ArrowEvalPython", "per-row offset-strip/fan arrangement union"),
@@ -154,6 +166,7 @@ CHECKS = {
     "spatial_predicate_join (interior_intersects)": [
         ("BroadcastHashJoin", "other side broadcast (refpoint pairs)"),
         ("ArrowEvalPython", "exact inclusion-exclusion area predicate"),
+        _floors_at_most(10),
     ],
     "ingest_pages (crawl ingest: extract + url dedup)": [
         (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",

@@ -70,7 +70,7 @@ base = spark.range(600_000).withColumn("b", F.col("id") * 8).repartition({n * 3}
 keyed = base.select("b", F.explode(F.sequence(F.lit(0), F.lit(127))).alias("rep"))
 pts = derived_points(keyed.select((F.col("b") * 128 + F.col("rep")).alias("pt_id")), "pt_id")
 zones = spark.range(400).select(F.col("id").alias("zone_id"), (F.col("id") % 20 - 10).cast("double").alias("x0"), (F.col("id") / 20 - 10).cast("long").cast("double").alias("y0"))
-pts = pts.withColumn("cell", cell_of_expr(F.col("lon"), F.col("lat"), 9))
+pts = pts.withColumn("cell", cell_of_expr("lon", "lat", 9))
 pts.count()  # warm
 t0 = time.time()
 n_rows = (pts.join(F.broadcast(zones),

@@ -195,9 +195,10 @@ def cover_polygon_classified(xs: np.ndarray, ys: np.ndarray, level: int,
     * fringe: the cells any edge meets — every ring, closing and
       horizontal edges included. Each edge is walked one row band at a
       time in grid units; bands and column spans are widened by 16 ulps
-      of the grid width, more than the rounding of cell_of /
-      cell_of_expr, of the ray cast's crossing and of this walk together,
-      so a point near an edge never lands in a full cell;
+      of the grid width, more than the rounding of cell_of (which
+      functions/cells_sql.cell_of_expr reproduces bit for bit), of the
+      ray cast's crossing and of this walk together, so a point near an
+      edge never lands in a full cell;
     * full: the other cells whose centre geom.points_in_rings puts
       inside. No edge meets them, so every point in one is inside by the
       same even-odd rule and needs no exact refine. A cell that an edge

@@ -1,4 +1,4 @@
-"""Quadkey cell id as PURE JVM Column expressions (whole-stage codegen).
+"""Quadkey cell ids and the bbox pair join as Spark SQL text.
 
 The point-side cell assignment is the hottest expression in every spatial
 join — evaluating it as a pandas UDF costs a full Arrow round trip per
@@ -6,22 +6,23 @@ pass, and Catalyst may safely evaluate join-key expressions twice
 (null-filter + projection). The morton interleave is 12 shift/and/or ops
 per coordinate (the classic spread-bits ladder), so it runs entirely
 inside codegen here. Bit-identical to cells.cell_of (tested in
-tests/test_cells_sql.py).
+tests/test_cells_sql.py): the same FLOOR/greatest/least/shiftleft/&/| in
+the same order. A NULL coordinate gives a NULL grid coordinate and so a
+NULL cell, never a real one.
 
-r6: every builder accepts its coordinate inputs as SQL TEXT (str) as
-well as Column. The str route assembles the whole ladder as one SQL
-string and parses it with a single ``F.expr`` call — the operators are
-identical (same FLOOR/greatest/least/shiftleft/&/| in the same order),
-but driver-side construction drops from hundreds of py4j round trips to
-a handful. Per-query construction is real wall time for short queries
-(guide §7.3: driver-side work shows up as "nothing is running"); the
-overlay chassis measured ~0.45s per construction in these builders
-alone. Column inputs keep the original tree route unchanged.
+SQL text is the one route: every expression here takes its inputs as
+SQL text and is one ``F.expr``, so the whole ladder is parsed by a
+single py4j call and building a query costs a few driver round trips
+instead of hundreds (driver-side construction is wall time a short
+query pays before anything runs).
+
+``bbox_pairs`` is the one candidate-pair join of the two-layer operators
+(overlay, predicate joins, erase_join, snap_to_layer, split_by_lines).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spandex_spark.cells import LEVEL_SHIFT
@@ -33,9 +34,9 @@ _MASKS = (
     (2, 0x3333333333333333),
     (1, 0x5555555555555555),
 )
+_LON = (-180.0, 360.0)
+_LAT = (-90.0, 180.0)
 
-
-# ---------------------------------------------------------------- SQL text
 
 def _spread_sql(v: str) -> str:
     for shift, mask in _MASKS:
@@ -49,8 +50,10 @@ def _grid_coord_sql(coord: str, origin: float, extent: float,
     # same op order as cells.grid_coords: (coord - origin)/extent * n → floor
     g = (f"CAST(FLOOR((({coord}) - {origin!r}) / {extent!r} * "
          f"{float(n)!r}) AS BIGINT)")
-    return (f"greatest(CAST(0 AS BIGINT), "
-            f"least(CAST({n - 1} AS BIGINT), {g}))")
+    # greatest/least skip NULL, so the clamp alone would put a NULL
+    # coordinate in an edge cell; the CASE keeps it NULL
+    return (f"CASE WHEN ({coord}) IS NOT NULL THEN greatest(CAST(0 AS BIGINT), "
+            f"least(CAST({n - 1} AS BIGINT), {g})) END")
 
 
 def _morton_sql(gx: str, gy: str, level: int) -> str:
@@ -58,117 +61,62 @@ def _morton_sql(gx: str, gy: str, level: int) -> str:
             f"shiftleft({_spread_sql(gy)}, 1))")
 
 
-def _cell_of_sql(lon: str, lat: str, level: int) -> str:
-    gx = _grid_coord_sql(lon, -180.0, 360.0, level)
-    gy = _grid_coord_sql(lat, -90.0, 180.0, level)
-    return _morton_sql(gx, gy, level)
-
-
-# ---------------------------------------------------------------- Columns
-
-def _spread_expr(v: Column) -> Column:
-    for shift, mask in _MASKS:
-        v = v.bitwiseOR(F.shiftleft(v, shift)).bitwiseAND(F.lit(mask))
-    return v
-
-
-def grid_coord_expr(coord: Column | str, origin: float, extent: float,
+def grid_coord_expr(coord: str, origin: float, extent: float,
                     level: int) -> Column:
-    if isinstance(coord, str):
-        return F.expr(_grid_coord_sql(coord, origin, extent, level))
-    n = 1 << level
-    # same op order as cells.grid_coords: (coord - origin)/extent * n → floor
-    g = F.floor((coord - F.lit(origin)) / F.lit(extent) * F.lit(float(n)))
-    return F.greatest(F.lit(0).cast("long"),
-                      F.least(F.lit(n - 1).cast("long"), g.cast("long")))
+    """Clamped integer grid coordinate of ``coord`` (cells.grid_coords)."""
+    return F.expr(_grid_coord_sql(coord, origin, extent, level))
 
 
-def cell_of_expr(lon: Column | str, lat: Column | str, level: int) -> Column:
+def cell_of_expr(lon: str, lat: str, level: int) -> Column:
     """JVM-side equivalent of cells.cell_of (same floats, same bits)."""
-    if isinstance(lon, str) and isinstance(lat, str):
-        return F.expr(_cell_of_sql(lon, lat, level))
-    gx = grid_coord_expr(lon, -180.0, 360.0, level)
-    gy = grid_coord_expr(lat, -90.0, 180.0, level)
-    return (F.lit(level << LEVEL_SHIFT)
-            .bitwiseOR(_spread_expr(gx))
-            .bitwiseOR(F.shiftleft(_spread_expr(gy), 1)))
+    return F.expr(_morton_sql(_grid_coord_sql(lon, *_LON, level),
+                              _grid_coord_sql(lat, *_LAT, level), level))
 
 
-def cell_parent_expr(cell: Column | str, child_level: int,
-                     parent_level: int) -> Column:
-    """Ancestor cell at a coarser level (prefix shift), JVM-side. The child
-    level is a plan-time constant (the shift count must be a literal)."""
-    if isinstance(cell, str):
-        morton = f"({cell} & {(1 << LEVEL_SHIFT) - 1})"
-        return F.expr(f"({parent_level << LEVEL_SHIFT} | "
-                      f"shiftrightunsigned({morton}, "
-                      f"{2 * (child_level - parent_level)}))")
-    morton = cell.bitwiseAND(F.lit((1 << LEVEL_SHIFT) - 1))
-    return (F.lit(parent_level << LEVEL_SHIFT)
-            .bitwiseOR(F.shiftrightunsigned(morton,
-                                            2 * (child_level - parent_level))))
+def bbox_of(geom: str) -> tuple[str, str, str, str]:
+    """(minx, miny, maxx, maxy) SQL text of a geometry struct's bbox."""
+    return tuple(f"{geom}.bbox.{f}" for f in ("minx", "miny", "maxx", "maxy"))
 
 
-def bbox_cells_expr(minx, miny, maxx, maxy, level: int) -> Column:
-    """Covering cells of a bbox as a PURE JVM array expression —
-    bit-identical to cells.cover_bbox (sequence over the clamped grid
-    index ranges, morton-interleaved per element inside codegen)."""
-    if all(isinstance(c, str) for c in (minx, miny, maxx, maxy)):
-        gx0 = _grid_coord_sql(minx, -180.0, 360.0, level)
-        gx1 = _grid_coord_sql(maxx, -180.0, 360.0, level)
-        gy0 = _grid_coord_sql(miny, -90.0, 180.0, level)
-        gy1 = _grid_coord_sql(maxy, -90.0, 180.0, level)
-        return F.expr(
-            f"flatten(transform(sequence({gy0}, {gy1}), "
-            f"gy -> transform(sequence({gx0}, {gx1}), "
-            f"gx -> {_morton_sql('gx', 'gy', level)})))")
-    gx0 = grid_coord_expr(minx, -180.0, 360.0, level)
-    gx1 = grid_coord_expr(maxx, -180.0, 360.0, level)
-    gy0 = grid_coord_expr(miny, -90.0, 180.0, level)
-    gy1 = grid_coord_expr(maxy, -90.0, 180.0, level)
-    head = F.lit(level << LEVEL_SHIFT)
-    return F.flatten(F.transform(
-        F.sequence(gy0, gy1),
-        lambda gy: F.transform(
-            F.sequence(gx0, gx1),
-            lambda gx: head.bitwiseOR(_spread_expr(gx))
-            .bitwiseOR(F.shiftleft(_spread_expr(gy), 1)))))
+def explode_bbox_cells(df: DataFrame, bbox, level: int) -> DataFrame:
+    """One row per cell covering ``bbox`` (SQL text (minx, miny, maxx,
+    maxy)): adds its grid coordinates ``_bgx``, ``_bgy`` and its ``cell``.
+    Two scalar sequence-explodes and the morton ladder over their
+    outputs, all in whole-stage codegen; the same cells, clamping and ids
+    as cells.cover_bbox."""
+    x0, y0, x1, y1 = bbox
+    gx = (_grid_coord_sql(x0, *_LON, level), _grid_coord_sql(x1, *_LON, level))
+    gy = (_grid_coord_sql(y0, *_LAT, level), _grid_coord_sql(y1, *_LAT, level))
+    return (df.withColumn("_bgx", F.expr(f"explode(sequence({gx[0]}, {gx[1]}))"))
+            .withColumn("_bgy", F.expr(f"explode(sequence({gy[0]}, {gy[1]}))"))
+            .withColumn("cell", F.expr(_morton_sql("_bgx", "_bgy", level))))
 
 
-def morton_cell_expr(gx, gy, level: int) -> Column:
-    """Cell id from integer grid coordinates (the xy_to_cell analog)."""
-    if isinstance(gx, str) and isinstance(gy, str):
-        return F.expr(_morton_sql(gx, gy, level))
-    return (F.lit(level << LEVEL_SHIFT)
-            .bitwiseOR(_spread_expr(gx))
-            .bitwiseOR(F.shiftleft(_spread_expr(gy), 1)))
+def bbox_pairs(left: DataFrame, right: DataFrame, level: int, *,
+               left_bbox, right_bbox,
+               broadcast_right: bool = True) -> DataFrame:
+    """One row per (left, right) pair whose bboxes meet (closed test:
+    touching bboxes meet), carrying both sides' columns and ``cell``.
 
-
-def explode_bbox_cells(df, minx, miny, maxx, maxy, level: int,
-                       out_col: str = "cell"):
-    """One row per bbox-covering cell via two scalar sequence-explodes —
-    the WHOLE-STAGE-CODEGEN form of bbox_cells_expr (Spark evaluates
-    higher-order array lambdas interpreted, which measured ~5x slower
-    than two Generates + the scalar morton ladder on this chassis).
-    Same cells, same clamping, bit-identical ids."""
-    if all(isinstance(c, str) for c in (minx, miny, maxx, maxy)):
-        gx0 = _grid_coord_sql(minx, -180.0, 360.0, level)
-        gx1 = _grid_coord_sql(maxx, -180.0, 360.0, level)
-        gy0 = _grid_coord_sql(miny, -90.0, 180.0, level)
-        gy1 = _grid_coord_sql(maxy, -90.0, 180.0, level)
-        out = (df.withColumn("_bgx",
-                             F.expr(f"explode(sequence({gx0}, {gx1}))"))
-               .withColumn("_bgy",
-                           F.expr(f"explode(sequence({gy0}, {gy1}))"))
-               .withColumn(out_col, F.expr(_morton_sql("_bgx", "_bgy",
-                                                       level))))
-        return out.drop("_bgx", "_bgy")
-    gx0 = grid_coord_expr(minx, -180.0, 360.0, level)
-    gx1 = grid_coord_expr(maxx, -180.0, 360.0, level)
-    gy0 = grid_coord_expr(miny, -90.0, 180.0, level)
-    gy1 = grid_coord_expr(maxy, -90.0, 180.0, level)
-    out = (df.withColumn("_bgx", F.explode(F.sequence(gx0, gx1)))
-           .withColumn("_bgy", F.explode(F.sequence(gy0, gy1)))
-           .withColumn(out_col, morton_cell_expr(F.col("_bgx"),
-                                                 F.col("_bgy"), level)))
-    return out.drop("_bgx", "_bgy")
+    Both bboxes (SQL text (minx, miny, maxx, maxy)) are covered by their
+    grid cells and the sides join on ``cell``. A pair meets in every cell
+    both covers hold, so it is kept only in the cell holding its
+    bbox-intersection min corner (Patel & DeWitt's reference point): that
+    corner lies in one covering cell of BOTH sides, so every meeting pair
+    comes back exactly once and there is no dedup shuffle. The corner is
+    tested on grid coordinates against the left row's exploded
+    (``_bgx``, ``_bgy``), which at a fixed level names the same cell as
+    the morton key, so each coordinate is floored once."""
+    lx0, ly0, lx1, ly1 = left_bbox
+    rx0, ry0, rx1, ry1 = right_bbox
+    lcells = explode_bbox_cells(left, left_bbox, level)
+    rcells = explode_bbox_cells(right, right_bbox, level).drop("_bgx", "_bgy")
+    if broadcast_right:
+        rcells = F.broadcast(rcells)
+    ref_gx = _grid_coord_sql(f"greatest({lx0}, {rx0})", *_LON, level)
+    ref_gy = _grid_coord_sql(f"greatest({ly0}, {ry0})", *_LAT, level)
+    keep = (f"({lx0}) <= ({rx1}) AND ({lx1}) >= ({rx0}) AND "
+            f"({ly0}) <= ({ry1}) AND ({ly1}) >= ({ry0}) AND "
+            f"{ref_gx} = _bgx AND {ref_gy} = _bgy")
+    return (lcells.join(rcells, "cell", "inner").filter(F.expr(keep))
+            .drop("_bgx", "_bgy"))

@@ -45,7 +45,7 @@ def adaptive_cells(points: DataFrame, *, max_per_cell: int,
         raise ValueError("max_per_cell must be >= 1")
     if not (0 <= base_level <= max_level <= 29):
         raise ValueError("need 0 <= base_level <= max_level <= 29")
-    lon, lat = F.col(lon_col), F.col(lat_col)
+    lon, lat = f"`{lon_col}`", f"`{lat_col}`"
     df = (points
           .withColumn(out_col, cell_of_expr(lon, lat, base_level))
           .withColumn("_lvl", F.lit(base_level))

@@ -33,8 +33,8 @@ def grid_cluster(points: DataFrame, *, level: int, min_count: int,
     key in its 4-connected dense-cell component); sparse-cell points get
     NULL. Returns (point_id_col, cluster_id)."""
     n = 1 << level
-    gx = grid_coord_expr(F.col(lon_col), -180.0, 360.0, level)
-    gy = grid_coord_expr(F.col(lat_col), -90.0, 180.0, level)
+    gx = grid_coord_expr(f"`{lon_col}`", -180.0, 360.0, level)
+    gy = grid_coord_expr(f"`{lat_col}`", -90.0, 180.0, level)
     pts = points.withColumn("_ck", (gy * F.lit(n) + gx).cast("long"))
     dense = (pts.groupBy("_ck").count()
              .filter(F.col("count") >= int(min_count)).select("_ck"))

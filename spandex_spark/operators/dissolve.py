@@ -128,8 +128,8 @@ def union_by(df: DataFrame, *, key_col: str, geom_col: str = "geom",
     if prepartition_level is None:
         return src.groupBy(key_col).applyInPandas(_merge, schema=schema)
 
-    cx = (F.col("_g")["bbox"]["minx"] + F.col("_g")["bbox"]["maxx"]) / 2.0
-    cy = (F.col("_g")["bbox"]["miny"] + F.col("_g")["bbox"]["maxy"]) / 2.0
+    cx = "((_g.bbox.minx + _g.bbox.maxx) / 2.0D)"
+    cy = "((_g.bbox.miny + _g.bbox.maxy) / 2.0D)"
     staged = src.withColumn("_ucell",
                             cell_of_expr(cx, cy, prepartition_level))
     schema1 = T.StructType([df.schema[key_col],

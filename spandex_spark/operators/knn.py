@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spandex_spark import cells as _cells
+from spandex_spark.functions.cells_sql import cell_of_expr
 from spandex_spark.geom import EARTH_RADIUS_M
 
 
@@ -587,7 +588,7 @@ def _candidate_pairs(q: DataFrame, lon: str, lat: str, bc, *, k: int,
     route."""
     hist, _ = bc.value
     qlevel = hist.level + _QLEVEL_EXTRA
-    qc = q.withColumn("_qcell", _cell_of_jvm(lon, lat, qlevel))
+    qc = q.withColumn("_qcell", cell_of_expr(lon, lat, qlevel))
 
     def _enumerate(batches):
         hist, sparse = bc.value
@@ -605,7 +606,8 @@ def _candidate_pairs(q: DataFrame, lon: str, lat: str, bc, *, k: int,
                                             np.float64), counts),
             })
 
-    pairs = (qc.select("_qcell").distinct()
+    # a query without a position has a NULL cell and no candidates
+    pairs = (qc.select("_qcell").where("_qcell IS NOT NULL").distinct()
              .mapInPandas(_enumerate, "_qcell long, _cell long, _dmax double"))
     return qc.join(pairs, "_qcell").drop("_qcell")
 
@@ -632,16 +634,11 @@ def _ring_candidates(q: DataFrame, f: DataFrame, *, k: int, level: int,
     """
     if level > _CELLS_MAX_LEVEL:
         raise ValueError(f"cells strategy supports level <= {_CELLS_MAX_LEVEL}")
-    fc = f.withColumn("_cell", _cell_of_jvm("_flon", "_flat", level))
+    fc = (f.withColumn("_cell", cell_of_expr("_flon", "_flat", level))
+          .where("_cell IS NOT NULL"))
     rows = fc.groupBy("_cell").agg(
         F.count(F.lit(1)), F.min("_flon"), F.max("_flon"),
         F.min("_flat"), F.max("_flat")).collect()  # collect-ok: O(occupied cells) histogram (+feature bbox per cell) -> index
     bc = build_cell_index(q.sparkSession, rows, level)
     qc = _candidate_pairs(q, "_qlon", "_qlat", bc, k=k, metric=metric)
     return qc.join(fc, "_cell", "inner").drop("_cell")
-
-
-def _cell_of_jvm(lon, lat, level: int):
-    from spandex_spark.functions.cells_sql import cell_of_expr
-    return cell_of_expr(lon, lat, level)
-

@@ -2,11 +2,12 @@
 
 Reference semantics: spandex/spatialtoolz.py::proportion_overlap — for each
 target polygon, SUM(ST_Area(ST_Intersection(t.geom, o.geom))) /
-ST_Area(t.geom). Rebuilt as: bbox-cover cell join for candidate pairs →
-reference-point pair dedup (a pair can meet in several cells; it is kept
-only in the cell of its bbox-intersection min corner, a JVM column
-predicate, so no dedup shuffle) → exact intersection-area kernel → hash
-aggregation per target.
+ST_Area(t.geom). Rebuilt as: candidate pairs from
+functions/cells_sql.bbox_pairs (bbox-cover cell join, bbox-overlap test,
+reference-point dedup: a pair can meet in several cells and is kept only
+in the cell of its bbox-intersection min corner, a JVM column predicate,
+so no dedup shuffle) → exact intersection-area kernel → hash aggregation
+per target.
 
 Intersection kernel has two tiers:
 - **JVM fast path** for canonical axis-aligned rectangle pairs (the
@@ -29,7 +30,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from spandex_spark import geom as _geom
-from spandex_spark.functions.cells_sql import cell_of_expr, explode_bbox_cells
+from spandex_spark.functions.cells_sql import bbox_of, bbox_pairs
 
 
 @pandas_udf(T.DoubleType())
@@ -120,27 +121,14 @@ def rect_intersection_area_expr(a, b):
 def _candidate_pairs(tgt: DataFrame, overlays: DataFrame,
                      overlay_id_col: str, level: int,
                      broadcast_overlays: bool) -> DataFrame:
-    """(_tid, _tgeom, _oid, _ogeom, cell) rows, one per (target, overlay)
-    pair whose bboxes meet. Both sides are covered by their bbox cells
-    and join on the cell; a pair meets in every cell both covers hold,
-    so it is kept only in the cell containing the bbox-intersection min
-    corner (Patel & DeWitt's reference-point method). That corner lies
-    in one bbox-cover cell of BOTH sides, and the filter is a pure JVM
-    column predicate, so there is no dedup shuffle."""
+    """(cell, _tid, _tgeom, _oid, _ogeom) rows, one per (target, overlay)
+    pair whose bboxes meet: ``cells_sql.bbox_pairs`` (bbox cells,
+    reference-point dedup, no dedup shuffle)."""
     ovl = overlays.select(F.col(overlay_id_col).alias("_oid"),
                           F.col("geom").alias("_ogeom"))
-    tgt_cells = explode_bbox_cells(
-        tgt, "_tgeom.bbox.minx", "_tgeom.bbox.miny",
-        "_tgeom.bbox.maxx", "_tgeom.bbox.maxy", level)
-    ovl_cells = explode_bbox_cells(
-        ovl, "_ogeom.bbox.minx", "_ogeom.bbox.miny",
-        "_ogeom.bbox.maxx", "_ogeom.bbox.maxy", level)
-    if broadcast_overlays:
-        ovl_cells = F.broadcast(ovl_cells)
-    pairs = tgt_cells.join(ovl_cells, "cell", "inner")
-    ref_x = "greatest(_tgeom.bbox.minx, _ogeom.bbox.minx)"
-    ref_y = "greatest(_tgeom.bbox.miny, _ogeom.bbox.miny)"
-    return pairs.filter(cell_of_expr(ref_x, ref_y, level) == F.col("cell"))
+    return bbox_pairs(tgt, ovl, level, left_bbox=bbox_of("_tgeom"),
+                      right_bbox=bbox_of("_ogeom"),
+                      broadcast_right=broadcast_overlays)
 
 
 def proportion_overlap(targets: DataFrame, overlays: DataFrame, *,
@@ -163,10 +151,12 @@ def proportion_overlap(targets: DataFrame, overlays: DataFrame, *,
     approximation (the intersection polygon itself is never materialized).
     target_area under 'sph_m2' is the exact spherical kernel.
 
-    Candidate pairs come from `_candidate_pairs` (bbox cells,
-    reference-point dedup, no dedup shuffle). That is exact for every
-    input, holed and multipart overlays included: the extra
-    bbox-over-geometry candidate pairs die at the ``ix_area > 0`` test.
+    Candidate pairs come from `_candidate_pairs`, i.e.
+    ``cells_sql.bbox_pairs`` (bbox cells, reference-point dedup, no
+    dedup shuffle, bbox-disjoint pairs pruned before any kernel). That is
+    exact for every input, holed and multipart overlays included: the
+    extra bbox-over-geometry candidate pairs die at the ``ix_area > 0``
+    test.
     """
     tgt = targets.select(F.col(target_id_col).alias("_tid"),
                          F.col("geom").alias("_tgeom"))
@@ -232,7 +222,8 @@ def intersection_join(targets: DataFrame, overlays: DataFrame, *,
     SHAPES, not just their areas). Returns one row per intersecting
     (target, overlay) pair: (target_id_col, overlay_id_col, out_col).
 
-    Same candidate pairs as proportion_overlap (`_candidate_pairs`):
+    Same candidate pairs as proportion_overlap (`_candidate_pairs`, i.e.
+    ``cells_sql.bbox_pairs``):
     rect x rect pairs construct the intersection rectangle in PURE JVM
     codegen; general pairs run geom.boolean_rings(a, b, 'intersection')
     (the planar-arrangement kernel — holes, multiparts, partial overlaps

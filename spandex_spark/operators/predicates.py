@@ -14,9 +14,10 @@ DE-9IM closures):
 * ``within``              — area(A∩B) == area(A).
 
 Plan shape: the proportion_overlap chassis — bbox cover cells both
-sides, Patel–DeWitt reference-point dedup, exact inclusion-exclusion
-intersection-area kernel (geom.rings_intersection_area — holes and
-multiparts exact) in one Arrow-vectorized pandas UDF. Only qualifying
+sides, Patel–DeWitt reference-point dedup (functions/cells_sql.bbox_pairs),
+exact inclusion-exclusion intersection-area kernel
+(geom.rings_intersection_area — holes and multiparts exact) in one
+Arrow-vectorized pandas UDF. Only qualifying
 pairs return; the area tolerance is a relative 1e-12 (FP shoelace noise,
 documented).
 """
@@ -41,34 +42,20 @@ def spatial_predicate_join(targets: DataFrame, others: DataFrame, *,
                            broadcast_others: bool = True) -> DataFrame:
     """Pairs (target_id, other_id) where ``predicate(target, other)``
     holds. ``contains`` means the TARGET contains the other feature;
-    ``within`` means the target lies within it."""
+    ``within`` means the target lies within it. Candidate pairs are the
+    bbox-meeting pairs of ``cells_sql.bbox_pairs``."""
     if predicate not in _PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r} "
                          f"(one of {_PREDICATES})")
-    from spandex_spark.functions.cells_sql import (cell_of_expr,
-                                                   explode_bbox_cells)
+    from spandex_spark.functions.cells_sql import bbox_of, bbox_pairs
 
     tgt = targets.select(F.col(target_id_col).alias("_tid"),
                          F.col("geom").alias("_tgeom"))
     oth = others.select(F.col(other_id_col).alias("_oid"),
                         F.col("geom").alias("_ogeom"))
-    tgt_cells = explode_bbox_cells(
-        tgt, "_tgeom.bbox.minx", "_tgeom.bbox.miny",
-        "_tgeom.bbox.maxx", "_tgeom.bbox.maxy", level)
-    oth_cells = explode_bbox_cells(
-        oth, "_ogeom.bbox.minx", "_ogeom.bbox.miny",
-        "_ogeom.bbox.maxx", "_ogeom.bbox.maxy", level)
-    if broadcast_others:
-        oth_cells = F.broadcast(oth_cells)
-    pairs = tgt_cells.join(oth_cells, "cell", "inner")
-    overlap = ((F.col("_tgeom.bbox.minx") <= F.col("_ogeom.bbox.maxx"))
-               & (F.col("_tgeom.bbox.maxx") >= F.col("_ogeom.bbox.minx"))
-               & (F.col("_tgeom.bbox.miny") <= F.col("_ogeom.bbox.maxy"))
-               & (F.col("_tgeom.bbox.maxy") >= F.col("_ogeom.bbox.miny")))
-    ref_x = "greatest(_tgeom.bbox.minx, _ogeom.bbox.minx)"
-    ref_y = "greatest(_tgeom.bbox.miny, _ogeom.bbox.miny)"
-    pairs = pairs.filter(overlap) \
-        .filter(cell_of_expr(ref_x, ref_y, level) == F.col("cell"))
+    pairs = bbox_pairs(tgt, oth, level, left_bbox=bbox_of("_tgeom"),
+                       right_bbox=bbox_of("_ogeom"),
+                       broadcast_right=broadcast_others)
     # containment needs the candidate's bbox inside the container's —
     # prune in JVM before any Python
     if predicate == "contains":

@@ -15,11 +15,12 @@ PostGIS ST_Snap semantics, both phases per geometry:
    matching break points and later noding is exact.
 
 Plan shape: the erase_join chassis — bbox-cover cells both sides
-(reference bboxes padded by the tolerance), reference-point dedup, one
-groupBy(target) shipping each geometry exactly the nearby reference
-features, then a numpy kernel.  Targets with no nearby reference pass
-through untouched via anti-join (zero Python for them).  Snapping is
-idempotent (pytested): a snapped geometry re-snaps to itself.
+(reference bboxes padded by the tolerance), reference-point dedup
+(functions/cells_sql.bbox_pairs), one groupBy(target) shipping each
+geometry exactly the nearby reference features, then a numpy kernel.
+Targets with no nearby reference pass through untouched via anti-join
+(zero Python for them). Snapping is idempotent (pytested): a snapped
+geometry re-snaps to itself.
 """
 
 from __future__ import annotations
@@ -90,36 +91,21 @@ def snap_to_layer(targets: DataFrame, reference: DataFrame, *,
     """(target_id, out_col): every target snapped to the reference
     layer's vertices; untouched targets pass through unchanged.
     Rings collapsing below 3 vertices come back NULL."""
-    from spandex_spark.functions.cells_sql import (cell_of_expr,
-                                                   explode_bbox_cells)
+    from spandex_spark.functions.cells_sql import bbox_of, bbox_pairs
     if tolerance <= 0:
         raise ValueError("tolerance must be positive")
     tol = float(tolerance)
     tgt = targets.select(F.col(target_id_col).alias("_tid"),
                          F.col("geom").alias("_tgeom"))
     ref = reference.select(F.col("geom").alias("_rgeom"))
-    tgt_cells = explode_bbox_cells(
-        tgt, "_tgeom.bbox.minx", "_tgeom.bbox.miny",
-        "_tgeom.bbox.maxx", "_tgeom.bbox.maxy", level)
-    ref_cells = explode_bbox_cells(
-        ref, f"(_rgeom.bbox.minx - {tol!r}D)",
-        f"(_rgeom.bbox.miny - {tol!r}D)",
-        f"(_rgeom.bbox.maxx + {tol!r}D)",
-        f"(_rgeom.bbox.maxy + {tol!r}D)", level)
-    if broadcast_reference:
-        ref_cells = F.broadcast(ref_cells)
-    overlap = ((F.col("_tgeom.bbox.minx") <= F.col("_rgeom.bbox.maxx") + tol)
-               & (F.col("_tgeom.bbox.maxx") >= F.col("_rgeom.bbox.minx") - tol)
-               & (F.col("_tgeom.bbox.miny") <= F.col("_rgeom.bbox.maxy") + tol)
-               & (F.col("_tgeom.bbox.maxy") >= F.col("_rgeom.bbox.miny") - tol))
-    ref_x0 = F.col("_rgeom.bbox.minx") - tol
-    ref_y0 = F.col("_rgeom.bbox.miny") - tol
-    pairs = (tgt_cells.join(ref_cells, "cell", "inner")
-             .filter(overlap)
-             .filter(cell_of_expr(
-                 f"greatest(_tgeom.bbox.minx, _rgeom.bbox.minx - {tol!r}D)",
-                 f"greatest(_tgeom.bbox.miny, _rgeom.bbox.miny - {tol!r}D)",
-                 level) == F.col("cell")))
+    # the reference bbox padded by the tolerance: a vertex within tol of
+    # a target needs the pair even when the plain bboxes are disjoint
+    padded = (f"(_rgeom.bbox.minx - {tol!r}D)",
+              f"(_rgeom.bbox.miny - {tol!r}D)",
+              f"(_rgeom.bbox.maxx + {tol!r}D)",
+              f"(_rgeom.bbox.maxy + {tol!r}D)")
+    pairs = bbox_pairs(tgt, ref, level, left_bbox=bbox_of("_tgeom"),
+                       right_bbox=padded, broadcast_right=broadcast_reference)
 
     id_type = targets.schema[target_id_col].dataType
     from pyspark.sql import types as T

@@ -10,14 +10,15 @@ of their direct container AND stay faces of their own, matching GEOS.
 
 Both sit on ``geom.arrangement_faces`` — the both-directions
 clockwise-most-turn face walk over the same noding/snapping pass the
-boolean kernel uses (SURVEY.md §2.1 O4/O6 family).  Plan shape for the
-join form is the erase_join/intersection_join chassis: bbox-cover
-cells both sides, Patel–DeWitt reference-point dedup, ONE
-groupBy(target) that ships each target exactly its overlapping blades,
-then a per-group Arrow kernel.  Targets no blade overlaps bypass the
-kernel entirely (anti-join union), so the Python path is sized by
-actually-cut polygons.  Same executor-sized-group contract as
-union_by: one target's blades must fit a task.
+boolean kernel uses (SURVEY.md §2.1 O4/O6 family). Plan shape for the
+join form is the erase_join/intersection_join chassis: bbox-cover cells
+both sides, Patel–DeWitt reference-point dedup
+(functions/cells_sql.bbox_pairs), ONE groupBy(target) that ships each
+target exactly its overlapping blades, then a per-group Arrow kernel.
+Targets no blade overlaps bypass the kernel entirely (anti-join union),
+so the Python path is sized by actually-cut polygons. Same
+executor-sized-group contract as union_by: one target's blades must fit
+a task.
 
 Tolerance contract: the arrangement's (quant snapping, eps_off
 side-probe) rules apply; faces thinner than eps_off may misclassify
@@ -144,28 +145,13 @@ def split_by_lines(targets: DataFrame, blades: DataFrame, *,
     """ST_Split as a two-layer join: (target_id, face_idx, out_col) with
     one row per face.  Uncut targets pass through as face 0 without
     touching Python."""
-    from spandex_spark.functions.cells_sql import (cell_of_expr,
-                                                   explode_bbox_cells)
+    from spandex_spark.functions.cells_sql import bbox_of, bbox_pairs
     tgt = targets.select(F.col(target_id_col).alias("_tid"),
                          F.col("geom").alias("_tgeom"))
     bld = blades.select(F.col("geom").alias("_bgeom"))
-    tgt_cells = explode_bbox_cells(
-        tgt, "_tgeom.bbox.minx", "_tgeom.bbox.miny",
-        "_tgeom.bbox.maxx", "_tgeom.bbox.maxy", level)
-    bld_cells = explode_bbox_cells(
-        bld, "_bgeom.bbox.minx", "_bgeom.bbox.miny",
-        "_bgeom.bbox.maxx", "_bgeom.bbox.maxy", level)
-    if broadcast_blades:
-        bld_cells = F.broadcast(bld_cells)
-    overlap = ((F.col("_tgeom.bbox.minx") <= F.col("_bgeom.bbox.maxx"))
-               & (F.col("_tgeom.bbox.maxx") >= F.col("_bgeom.bbox.minx"))
-               & (F.col("_tgeom.bbox.miny") <= F.col("_bgeom.bbox.maxy"))
-               & (F.col("_tgeom.bbox.maxy") >= F.col("_bgeom.bbox.miny")))
-    ref_x = "greatest(_tgeom.bbox.minx, _bgeom.bbox.minx)"
-    ref_y = "greatest(_tgeom.bbox.miny, _bgeom.bbox.miny)"
-    pairs = (tgt_cells.join(bld_cells, "cell", "inner")
-             .filter(overlap)
-             .filter(cell_of_expr(ref_x, ref_y, level) == F.col("cell")))
+    pairs = bbox_pairs(tgt, bld, level, left_bbox=bbox_of("_tgeom"),
+                       right_bbox=bbox_of("_bgeom"),
+                       broadcast_right=broadcast_blades)
 
     id_type = targets.schema[target_id_col].dataType
     out_schema = T.StructType([

@@ -117,7 +117,8 @@ def tag_points(points: DataFrame, polygons: DataFrame, *,
     For disjoint polygon layers each point matches at most one polygon; for
     overlapping layers the smallest ``poly_id_col`` wins (deterministic),
     attributes included; a polygon with a NULL id never wins. A point with
-    a NULL lon or lat tags NULL.
+    a NULL lon or lat has a NULL cell key (cells_sql.cell_of_expr), joins
+    no candidate list and tags NULL.
 
     Each point row left-joins the candidate list of its own cell (the
     cell's covering polygons, sorted by id) and keeps the first candidate

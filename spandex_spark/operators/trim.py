@@ -177,8 +177,9 @@ def erase_join(targets: DataFrame, masks: DataFrame, *,
     unchanged, fully-erased targets come back NULL (dropped when
     ``drop_empty``).
 
-    Plan shape (the intersection_join chassis): bbox-cover cells both
-    sides, Patel–DeWitt reference-point dedup (no dedup shuffle), then
+    Plan shape (the intersection_join chassis): ``cells_sql.bbox_pairs``
+    — bbox-cover cells both sides, bbox-disjoint pairs pruned,
+    Patel–DeWitt reference-point dedup (no dedup shuffle) — then
     ONE groupBy(target) that ships each target its overlapping masks
     (bounded by real overlap, never the whole mask layer) and runs
     geom.boolean_rings(target, masks, 'difference') — holes, multiparts,
@@ -186,31 +187,14 @@ def erase_join(targets: DataFrame, masks: DataFrame, *,
     the masks implicitly). Same executor-sized-group contract as
     union_by.
     """
-    from spandex_spark.functions.cells_sql import (cell_of_expr,
-                                                   explode_bbox_cells)
+    from spandex_spark.functions.cells_sql import bbox_of, bbox_pairs
 
     tgt = targets.select(F.col(target_id_col).alias("_tid"),
                          F.col("geom").alias("_tgeom"))
     msk = masks.select(F.col("geom").alias("_ogeom"))
-    tgt_cells = explode_bbox_cells(
-        tgt, "_tgeom.bbox.minx", "_tgeom.bbox.miny",
-        "_tgeom.bbox.maxx", "_tgeom.bbox.maxy", level)
-    msk_cells = explode_bbox_cells(
-        msk, "_ogeom.bbox.minx", "_ogeom.bbox.miny",
-        "_ogeom.bbox.maxx", "_ogeom.bbox.maxy", level)
-    if broadcast_masks:
-        msk_cells = F.broadcast(msk_cells)
-    pairs = tgt_cells.join(msk_cells, "cell", "inner")
-    # bbox-disjoint pairs never reach the kernel; refpoint dedup keeps
-    # each surviving (target, mask) pair exactly once
-    ref_x = "greatest(_tgeom.bbox.minx, _ogeom.bbox.minx)"
-    ref_y = "greatest(_tgeom.bbox.miny, _ogeom.bbox.miny)"
-    overlap = ((F.col("_tgeom.bbox.minx") <= F.col("_ogeom.bbox.maxx"))
-               & (F.col("_tgeom.bbox.maxx") >= F.col("_ogeom.bbox.minx"))
-               & (F.col("_tgeom.bbox.miny") <= F.col("_ogeom.bbox.maxy"))
-               & (F.col("_tgeom.bbox.maxy") >= F.col("_ogeom.bbox.miny")))
-    pairs = pairs.filter(overlap) \
-        .filter(cell_of_expr(ref_x, ref_y, level) == F.col("cell"))
+    pairs = bbox_pairs(tgt, msk, level, left_bbox=bbox_of("_tgeom"),
+                       right_bbox=bbox_of("_ogeom"),
+                       broadcast_right=broadcast_masks)
 
     agg = pairs.groupBy("_tid").agg(
         F.first("_tgeom").alias("_tgeom"),

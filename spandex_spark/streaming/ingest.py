@@ -42,9 +42,7 @@ def stream_geotag_pages(spark: SparkSession, input_dir: str, output_dir: str,
              .option("maxFilesPerTrigger", 8)
              .parquet(input_dir))
     tagged = geotag(pages, gazetteer)
-    tagged = tagged.withColumn(
-        "cell", F.when(F.col("lon").isNotNull(),
-                       cell_of_expr("lon", "lat", level)))
+    tagged = tagged.withColumn("cell", cell_of_expr("lon", "lat", level))
     writer = (tagged.writeStream
               .format("parquet")
               .option("path", output_dir)
@@ -151,9 +149,7 @@ def stream_append_table(spark: SparkSession, input_dir: str,
              .option("maxFilesPerTrigger", 8)
              .parquet(input_dir))
     tagged = geotag(pages, gazetteer)
-    tagged = tagged.withColumn(
-        "cell", F.when(F.col("lon").isNotNull(),
-                       cell_of_expr("lon", "lat", level)))
+    tagged = tagged.withColumn("cell", cell_of_expr("lon", "lat", level))
     table = IcebergishTable(table_root)
     committed = set()
 

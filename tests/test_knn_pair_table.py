@@ -101,6 +101,25 @@ class TestPairTableRoute:
                         metric="planar").collect()]
         assert got == [(1, 1, 7, dx * dx + dy * dy)]
 
+    def test_rows_without_a_position_take_no_part(self, spark):
+        # a NULL coordinate has a NULL cell: such a query gets no rows and
+        # such a feature is never a candidate
+        schema = "id long, lon double, lat double"
+        qs = [(i, float(i % 7) - 3.0, float(i % 5) - 2.0) for i in range(40)]
+        fs = [(100 + i, float(i % 4) - 1.4, float(i % 3) - 0.9)
+              for i in range(12)]
+
+        def run(q, f, strategy):
+            out = knn_join(spark.createDataFrame(q, schema),
+                           spark.createDataFrame(f, schema), k=3,
+                           query_id_col="id", feature_id_col="id",
+                           strategy=strategy, level=7, metric="planar")
+            return sorted(tuple(r) for r in out.collect())
+
+        got = run(qs + [(90, None, 1.0), (91, 1.0, None)],
+                  fs + [(200, None, 0.0), (201, 0.0, None)], "cells")
+        assert got == run(qs, fs, "broadcast") and len(got) == 120
+
     def test_cells_plans_run_python_once_per_distinct_query_cell(self, spark):
         # Both cells routes: no Python UDF on the query stream, and exactly
         # one MapInPandas, fed by the distinct-query-cell aggregate. The

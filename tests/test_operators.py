@@ -629,6 +629,21 @@ class TestGridCluster:
         for i in noise_ids:
             assert out[i] is None
 
+    def test_null_coordinates_get_null_cluster(self, spark):
+        """A point without a position has no cell: NULL cluster_id, even
+        when enough of them would make a dense cell."""
+        from spandex_spark.operators.cluster import grid_cluster
+        rows = [(i, 0.5 + 0.01 * i, 0.5) for i in range(5)]
+        rows += [(10 + i, None, 0.5) for i in range(5)]
+        rows += [(20 + i, 0.5, None) for i in range(5)]
+        df = spark.createDataFrame(rows, "p long, lon double, lat double")
+        out = {r.p: r.cluster_id
+               for r in grid_cluster(df, level=9, min_count=3,
+                                     point_id_col="p").collect()}
+        assert len({out[i] for i in range(5)}) == 1
+        assert out[0] is not None
+        assert all(out[i] is None for i in range(10, 25) if i % 10 < 5)
+
 
 class TestBufferPolygons:
     GEOM_SCHEMA = ("pid long, geom struct<kind:tinyint, xs:array<double>,"
