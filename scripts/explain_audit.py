@@ -57,9 +57,10 @@ CHECKS = {
          "broadcast feature side"),
     ],
     "overlay": [("BroadcastHashJoin", "overlay side broadcast"),
-                (r"least\(", "rect×rect fast path is pure JVM arithmetic "
-                             "(LEAST/GREATEST inside codegen, no Python)"),
-                _floors_at_most(20)],
+                (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",
+                 "ZERO Python operators — every pair and target area is "
+                 "the one SQL area kernel"),
+                _floors_at_most(10)],
     "knn cells (query-cell pair table)": [
         *_PAIR_TABLE_CHECKS,
         ("HashAggregate|SortAggregate", "k=1 min_by map-side combine"),
@@ -85,8 +86,9 @@ CHECKS = {
         ("HashAggregate", "per-(key,bucket) carry summary is hash agg"),
     ],
     "overlay sph_m2 (geodesic)": [
-        (r"SIN\(|sin\(", "spherical rect area (R²Δλ·Δsinφ) inside JVM "
-                         "codegen — no Python for rect×rect pairs"),
+        (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",
+         "ZERO Python operators — the area kernel runs in the equal-area "
+         "plane (R·λ, R·sin φ)"),
         ("BroadcastHashJoin", "overlay side broadcast"),
     ],
     "dwithin (range join)": [
@@ -165,7 +167,8 @@ CHECKS = {
     ],
     "spatial_predicate_join (interior_intersects)": [
         ("BroadcastHashJoin", "other side broadcast (refpoint pairs)"),
-        ("ArrowEvalPython", "exact inclusion-exclusion area predicate"),
+        (r"^(?![\s\S]*(?:ArrowEvalPython|BatchEvalPython|MapInPandas))",
+         "ZERO Python operators — the area predicate is the SQL kernel"),
         _floors_at_most(10),
     ],
     "ingest_pages (crawl ingest: extract + url dedup)": [

@@ -9,15 +9,13 @@ in the cell of its bbox-intersection min corner, a JVM column predicate,
 so no dedup shuffle) → exact intersection-area kernel → hash aggregation
 per target.
 
-Intersection kernel has two tiers:
-- **JVM fast path** for canonical axis-aligned rectangle pairs (the
-  dominant case for grid zone/parcel layers): pure LEAST/GREATEST column
-  arithmetic on the ring vertices — whole-stage codegen, zero Python, and
-  bitwise-identical to the numpy rectangle kernel (same FP ops in the
-  same order).
-- **Arrow-batched pandas UDF** running the exact even-odd multi-ring
-  kernel (geom.rings_intersection_area) for everything else — holes and
-  multipolygons included.
+The intersection kernel is one Spark SQL expression for every pair
+(functions/area_sql.py): a double sum over the two geometries' edges of
+closed-form trapezoid overlaps, exact for holes and multipolygons, and
+the closed-form rectangle area to the bit on rectangle pairs. The target
+area is the same sum over one geometry. Both run inside the JVM, so the
+plan holds no Python operator; ``area_unit='sph_m2'`` runs the kernel in
+the equal-area plane (R·λ, R·sin φ).
 """
 
 from __future__ import annotations
@@ -30,38 +28,9 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from spandex_spark import geom as _geom
+from spandex_spark.functions.area_sql import (geometry_area,
+                                              intersection_area_sql)
 from spandex_spark.functions.cells_sql import bbox_of, bbox_pairs
-
-
-@pandas_udf(T.DoubleType())
-def _ix_area(xs1: pd.Series, ys1: pd.Series, off1: pd.Series,
-             xs2: pd.Series, ys2: pd.Series, off2: pd.Series) -> pd.Series:
-    out = np.empty(len(xs1))
-    for i in range(len(xs1)):
-        o1 = off1.iloc[i]
-        o2 = off2.iloc[i]
-        out[i] = _geom.rings_intersection_area(
-            np.asarray(xs1.iloc[i], np.float64), np.asarray(ys1.iloc[i], np.float64),
-            np.asarray(o1, np.int64) if o1 is not None and len(o1) > 2 else None,
-            np.asarray(xs2.iloc[i], np.float64), np.asarray(ys2.iloc[i], np.float64),
-            np.asarray(o2, np.int64) if o2 is not None and len(o2) > 2 else None)
-    return pd.Series(out)
-
-
-@pandas_udf(T.DoubleType())
-def _poly_area(xs: pd.Series, ys: pd.Series, offs: pd.Series) -> pd.Series:
-    out = np.empty(len(xs))
-    for i in range(len(xs)):
-        o = offs.iloc[i]
-        out[i] = _geom.rings_area(
-            np.asarray(xs.iloc[i], np.float64), np.asarray(ys.iloc[i], np.float64),
-            np.asarray(o, np.int64) if o is not None and len(o) > 2 else None)
-    return pd.Series(out)
-
-
-def polygon_area_udf(geom_col):
-    """ST_Area analog (even-odd multi-ring: holes subtract)."""
-    return _poly_area(geom_col["xs"], geom_col["ys"], geom_col["ring_offsets"])
 
 
 @pandas_udf(T.DoubleType())
@@ -81,27 +50,10 @@ def spherical_area_udf(geom_col):
     return _sph_area(geom_col["xs"], geom_col["ys"], geom_col["ring_offsets"])
 
 
-def rect_spherical_area_expr(x0, y0, x1, y1):
-    """EXACT spherical area (m²) of the lon/lat rectangle [x0,x1]×[y0,y1]
-    as pure column arithmetic: R²·Δλ·(sin φ1 − sin φ0). For a rectangle
-    the Chamberlain-Duquette integral reduces to this closed form, so the
-    JVM path and the kernel agree to FP round-off."""
-    r2 = F.lit(_geom.EARTH_RADIUS_M * _geom.EARTH_RADIUS_M)
-    return (r2 * F.radians(x1 - x0)
-            * (F.sin(F.radians(y1)) - F.sin(F.radians(y0))))
-
-
-def intersection_area_udf(geom_a, geom_b):
-    """ST_Area(ST_Intersection(a, b)) analog (multi-ring aware)."""
-    return _ix_area(geom_a["xs"], geom_a["ys"], geom_a["ring_offsets"],
-                    geom_b["xs"], geom_b["ys"], geom_b["ring_offsets"])
-
-
 def is_canonical_rect(g):
     """JVM predicate: geometry is a single-ring axis-aligned rectangle in
     the canonical vertex order every layer builder emits
-    (xs=[x0,x1,x1,x0], ys=[y0,y0,y1,y1], x0<x1, y0<y1). Non-canonical
-    rectangles simply fall through to the exact Python kernel."""
+    (xs=[x0,x1,x1,x0], ys=[y0,y0,y1,y1], x0<x1, y0<y1)."""
     xs, ys, offs = g["xs"], g["ys"], g["ring_offsets"]
     single_ring = F.coalesce(F.size(offs) <= 2, F.lit(True))
     return ((F.size(xs) == 4) & single_ring
@@ -109,23 +61,19 @@ def is_canonical_rect(g):
             & (ys[0] == ys[1]) & (ys[2] == ys[3]) & (ys[1] < ys[2]))
 
 
-def rect_intersection_area_expr(a, b):
-    """Rect×rect intersection area as pure column arithmetic — the same
-    min/max-subtract-multiply FP ops as the numpy rectangle kernel, so the
-    two paths are bitwise interchangeable."""
-    w = F.least(a["xs"][1], b["xs"][1]) - F.greatest(a["xs"][0], b["xs"][0])
-    h = F.least(a["ys"][2], b["ys"][2]) - F.greatest(a["ys"][0], b["ys"][0])
-    return F.when((w > 0) & (h > 0), w * h).otherwise(F.lit(0.0))
-
-
 def _candidate_pairs(tgt: DataFrame, overlays: DataFrame,
                      overlay_id_col: str, level: int,
-                     broadcast_overlays: bool) -> DataFrame:
+                     broadcast_overlays: bool,
+                     area_unit: str | None = None) -> DataFrame:
     """(cell, _tid, _tgeom, _oid, _ogeom) rows, one per (target, overlay)
     pair whose bboxes meet: ``cells_sql.bbox_pairs`` (bbox cells,
-    reference-point dedup, no dedup shuffle)."""
+    reference-point dedup, no dedup shuffle). With ``area_unit`` each
+    overlay also carries its ``geometry_area`` struct ``_ok``, computed
+    once per overlay."""
     ovl = overlays.select(F.col(overlay_id_col).alias("_oid"),
                           F.col("geom").alias("_ogeom"))
+    if area_unit is not None:
+        ovl = ovl.withColumn("_ok", geometry_area("_ogeom", area_unit))
     return bbox_pairs(tgt, ovl, level, left_bbox=bbox_of("_tgeom"),
                       right_bbox=bbox_of("_ogeom"),
                       broadcast_right=broadcast_overlays)
@@ -140,72 +88,45 @@ def proportion_overlap(targets: DataFrame, overlays: DataFrame, *,
 
     Returns (target_id_col, overlap_area, target_area, proportion_overlap);
     with ``keep_pairs`` returns per-(target, overlay) intersection rows
-    instead (the trim/clip building block, O4).
+    with a positive area instead (the trim/clip building block, O4).
 
     ``area_unit``: 'deg2' (planar square degrees — the oracle-exact
     default) or 'sph_m2' (geodesic m² on the mean-Earth sphere, the
-    ST_Area(geography) shape): rect×rect intersections get the EXACT
-    closed-form spherical rectangle area, still pure JVM codegen; general
-    intersections scale the planar area by (πR/180)²·cos(mid-lat of the
-    intersection bbox) — the first-order geodesic correction, documented
-    approximation (the intersection polygon itself is never materialized).
-    target_area under 'sph_m2' is the exact spherical kernel.
+    ST_Area(geography) shape). 'sph_m2' runs the same kernel on the
+    vertices mapped to the Lambert cylindrical equal-area plane
+    (R·λ, R·sin φ): exact for the lon/lat rectangle R²·Δλ·(sin φ1 −
+    sin φ0), and for any ring the Chamberlain–Duquette sum of
+    geom.spherical_rings_area without its ``2 +`` term, so the pieces of
+    a target sum to its area in both units.
+
+    A target with a NULL geometry keeps its row: overlap_area 0.0,
+    target_area and proportion_overlap NULL.
 
     Candidate pairs come from `_candidate_pairs`, i.e.
     ``cells_sql.bbox_pairs`` (bbox cells, reference-point dedup, no
     dedup shuffle, bbox-disjoint pairs pruned before any kernel). That is
-    exact for every input, holed and multipart overlays included: the
-    extra bbox-over-geometry candidate pairs die at the ``ix_area > 0``
-    test.
+    exact for every input, holed and multipart overlays included: a pair
+    whose bboxes meet but whose shapes do not adds 0.0.
     """
     tgt = targets.select(F.col(target_id_col).alias("_tid"),
                          F.col("geom").alias("_tgeom"))
+    tgt = tgt.withColumn("_tk", geometry_area("_tgeom", area_unit))
     pairs = _candidate_pairs(tgt, overlays, overlay_id_col, level,
-                             broadcast_overlays)
-
-    # split: rect×rect pairs stay entirely JVM-side (codegen); the rest run
-    # the exact multi-ring kernel. One scan each — the filter is a cheap
-    # column predicate.
-    both_rect = is_canonical_rect(F.col("_tgeom")) & is_canonical_rect(F.col("_ogeom"))
-    if area_unit not in ("deg2", "sph_m2"):
-        raise ValueError(f"unknown area_unit {area_unit!r}")
-    if area_unit == "sph_m2":
-        a, b = F.col("_tgeom"), F.col("_ogeom")
-        ix0 = F.greatest(a["xs"][0], b["xs"][0])
-        ix1 = F.least(a["xs"][1], b["xs"][1])
-        iy0 = F.greatest(a["ys"][0], b["ys"][0])
-        iy1 = F.least(a["ys"][2], b["ys"][2])
-        rect_area = F.when((ix1 > ix0) & (iy1 > iy0),
-                           rect_spherical_area_expr(ix0, iy0, ix1, iy1)
-                           ).otherwise(F.lit(0.0))
-        # general pairs: planar deg² × first-order geodesic scale at the
-        # intersection-bbox mid-latitude
-        gx0 = F.greatest(a["bbox"]["minx"], b["bbox"]["minx"])
-        gx1 = F.least(a["bbox"]["maxx"], b["bbox"]["maxx"])
-        gy0 = F.greatest(a["bbox"]["miny"], b["bbox"]["miny"])
-        gy1 = F.least(a["bbox"]["maxy"], b["bbox"]["maxy"])
-        deg_m = _geom.EARTH_RADIUS_M * np.pi / 180.0
-        gen_scale = (F.lit(deg_m * deg_m)
-                     * F.cos(F.radians((gy0 + gy1) / 2.0)))
-    else:
-        rect_area = rect_intersection_area_expr(F.col("_tgeom"), F.col("_ogeom"))
-        gen_scale = F.lit(1.0)
-    rect_pairs = pairs.filter(both_rect).withColumn("ix_area", rect_area)
-    gen_pairs = pairs.filter(~both_rect).withColumn(
-        "ix_area",
-        intersection_area_udf(F.col("_tgeom"), F.col("_ogeom")) * gen_scale)
-    pairs = rect_pairs.unionByName(gen_pairs)
-    pairs = pairs.filter(F.col("ix_area") > 0.0)
+                             broadcast_overlays, area_unit)
+    ix = intersection_area_sql("_tgeom", "_tk", "_ogeom", "_ok", area_unit)
 
     if keep_pairs:
+        # one evaluation per pair: a filter on a projected kernel would be
+        # pushed into the join condition and evaluated there again
+        pairs = pairs.withColumn(
+            "ix_area", F.expr(f"explode(filter(array({ix}), _v -> _v > 0D))"))
         return pairs.select(F.col("_tid").alias(target_id_col),
                             F.col("_oid").alias(overlay_id_col), "ix_area")
 
-    t_area = (spherical_area_udf(F.col("_tgeom")) if area_unit == "sph_m2"
-              else polygon_area_udf(F.col("_tgeom")))
-    tgt_area = tgt.withColumn("target_area", t_area).select("_tid", "target_area")
-    agg = pairs.groupBy("_tid").agg(F.sum("ix_area").alias("overlap_area"))
-    out = (tgt_area.join(agg, "_tid", "left")
+    agg = (pairs.select("_tid", F.expr(ix).alias("ix_area"))
+           .groupBy("_tid").agg(F.sum("ix_area").alias("overlap_area")))
+    out = (tgt.select("_tid", F.col("_tk.area").alias("target_area"))
+           .join(agg, "_tid", "left")
            .withColumn("overlap_area", F.coalesce(F.col("overlap_area"), F.lit(0.0)))
            .withColumn("proportion_overlap",
                        F.col("overlap_area") / F.col("target_area")))

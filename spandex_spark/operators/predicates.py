@@ -13,25 +13,29 @@ DE-9IM closures):
 * ``contains``            — area(A∩B) == area(B) (B's interior ⊆ A);
 * ``within``              — area(A∩B) == area(A).
 
+Each comparison has a 1e-12 tolerance, relative above 1 deg² and
+absolute below it: an intersection area of at most 1e-12 ×
+max(min(area(A), area(B)), 1) is zero. The kernel's sums over a shared
+edge that is not horizontal cancel only to FP round-off, so two shapes
+that share such an edge have an intersection area of ~1e-17, not 0.
+
 Plan shape: the proportion_overlap chassis — bbox cover cells both
 sides, Patel–DeWitt reference-point dedup (functions/cells_sql.bbox_pairs),
-exact inclusion-exclusion intersection-area kernel
-(geom.rings_intersection_area — holes and multiparts exact) in one
-Arrow-vectorized pandas UDF. Only qualifying
-pairs return; the area tolerance is a relative 1e-12 (FP shoelace noise,
-documented).
+then one JVM filter on the exact intersection-area kernel of
+functions/area_sql.py (holes and multiparts exact), with each side's own
+area computed once per geometry by the same kernel. The plan holds no
+Python operator. Only qualifying pairs return. A NULL geometry forms
+no pair.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-from spandex_spark import geom as _geom
+from spandex_spark.functions.area_sql import (geometry_area,
+                                              intersection_area_sql)
+from spandex_spark.functions.cells_sql import bbox_of, bbox_pairs
 
 _PREDICATES = ("interior_intersects", "contains", "within")
 
@@ -47,17 +51,17 @@ def spatial_predicate_join(targets: DataFrame, others: DataFrame, *,
     if predicate not in _PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r} "
                          f"(one of {_PREDICATES})")
-    from spandex_spark.functions.cells_sql import bbox_of, bbox_pairs
-
     tgt = targets.select(F.col(target_id_col).alias("_tid"),
-                         F.col("geom").alias("_tgeom"))
+                         F.col("geom").alias("_tgeom"),
+                         geometry_area("geom").alias("_tk"))
     oth = others.select(F.col(other_id_col).alias("_oid"),
-                        F.col("geom").alias("_ogeom"))
+                        F.col("geom").alias("_ogeom"),
+                        geometry_area("geom").alias("_ok"))
     pairs = bbox_pairs(tgt, oth, level, left_bbox=bbox_of("_tgeom"),
                        right_bbox=bbox_of("_ogeom"),
                        broadcast_right=broadcast_others)
     # containment needs the candidate's bbox inside the container's —
-    # prune in JVM before any Python
+    # prune before the area kernel
     if predicate == "contains":
         pairs = pairs.filter(
             (F.col("_ogeom.bbox.minx") >= F.col("_tgeom.bbox.minx"))
@@ -71,52 +75,14 @@ def spatial_predicate_join(targets: DataFrame, others: DataFrame, *,
             & (F.col("_tgeom.bbox.miny") >= F.col("_ogeom.bbox.miny"))
             & (F.col("_tgeom.bbox.maxy") <= F.col("_ogeom.bbox.maxy")))
 
-    # rect×rect fast path (the overlay chassis rule): canonical rects
-    # resolve every predicate from bbox arithmetic in pure JVM codegen —
-    # only general polygons cross into Python
-    from spandex_spark.operators.overlay import is_canonical_rect
-    ta, ob = F.col("_tgeom"), F.col("_ogeom")
-    both_rect = is_canonical_rect(ta) & is_canonical_rect(ob)
+    ix = intersection_area_sql("_tgeom", "_tk", "_ogeom", "_ok")
     if predicate == "interior_intersects":
-        rect_cond = ((ta["bbox"]["minx"] < ob["bbox"]["maxx"])
-                     & (ta["bbox"]["maxx"] > ob["bbox"]["minx"])
-                     & (ta["bbox"]["miny"] < ob["bbox"]["maxy"])
-                     & (ta["bbox"]["maxy"] > ob["bbox"]["miny"]))
+        holds = f"{ix} > 1e-12D * greatest(least(_tk.area, _ok.area), 1D)"
     else:
-        # the contains/within bbox prune above already IS rect
-        # containment; positive area is guaranteed by canonical rects
-        rect_cond = F.lit(True)
-    rect_pairs = pairs.filter(both_rect).filter(rect_cond)
-    gen = pairs.filter(~both_rect)
-
-    @pandas_udf(T.BooleanType())
-    def _holds(txs: pd.Series, tys: pd.Series, toffs: pd.Series,
-               oxs: pd.Series, oys: pd.Series, ooffs: pd.Series) -> pd.Series:
-        out = np.zeros(len(txs), dtype=bool)
-        for i in range(len(txs)):
-            tx = np.asarray(txs.iloc[i], np.float64)
-            ty = np.asarray(tys.iloc[i], np.float64)
-            to = toffs.iloc[i]
-            to = (np.asarray(to, np.int64)
-                  if to is not None and len(to) > 2 else None)
-            ox = np.asarray(oxs.iloc[i], np.float64)
-            oy = np.asarray(oys.iloc[i], np.float64)
-            oo = ooffs.iloc[i]
-            oo = (np.asarray(oo, np.int64)
-                  if oo is not None and len(oo) > 2 else None)
-            ix = _geom.rings_intersection_area(tx, ty, to, ox, oy, oo)
-            if predicate == "interior_intersects":
-                out[i] = ix > 0.0
-            elif predicate == "contains":
-                b = _geom.rings_area(ox, oy, oo)
-                out[i] = b > 0 and abs(ix - b) <= 1e-12 * max(b, 1.0)
-            else:  # within
-                a = _geom.rings_area(tx, ty, to)
-                out[i] = a > 0 and abs(ix - a) <= 1e-12 * max(a, 1.0)
-        return pd.Series(out)
-
-    gen_kept = gen.filter(_holds(ta["xs"], ta["ys"], ta["ring_offsets"],
-                                 ob["xs"], ob["ys"], ob["ring_offsets"]))
-    kept = rect_pairs.unionByName(gen_kept)
+        # contains: area(A∩B) == area(B); within: area(A∩B) == area(A)
+        whole = "_ok.area" if predicate == "contains" else "_tk.area"
+        holds = (f"{whole} > 0D AND "
+                 f"abs({ix} - {whole}) <= 1e-12D * greatest({whole}, 1D)")
+    kept = pairs.filter(F.expr(holds))
     return kept.select(F.col("_tid").alias(target_id_col),
                        F.col("_oid").alias(other_id_col))

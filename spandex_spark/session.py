@@ -1,6 +1,8 @@
 """SparkSession factory with the engine's standard configuration.
 
-Arrow execution on (all geometry kernels run as vectorized pandas UDFs),
+Arrow execution on (the geometry kernels left in Python run as vectorized
+pandas UDFs; the hot refines — tag's ray cast, the overlay and predicate
+area kernel, the cell keys — are Spark SQL expressions),
 AQE on (coalesce + skew-join backstop; primary skew mitigation is explicit
 mega-cell salting, see operators/skew.py), shuffle partitions sized for the
 local-mode core count but representative of a multi-executor layout.

@@ -149,4 +149,4 @@ def test_pair_plans_floor_each_coordinate_once(spark):
     po = proportion_overlap(parcels_df(spark), zones_df(spark),
                             target_id_col="parcel_id",
                             overlay_id_col="zone_id", level=8)
-    assert _floor_calls(po) <= 20
+    assert _floor_calls(po) <= 10
